@@ -34,23 +34,12 @@ class MetricsLog:
             return [json.loads(line) for line in f if line.strip()]
 
 
-def batch_lineage(events_df) -> list[dict]:
-    """Per binlog-file max LSN + row count for the batch (the reference's
-    per-destination parse-position persistence,
-    parse/.../AbstractEventParser.java:458-485)."""
-    from pyspark.sql import functions as F
-
-    rows = (
-        events_df.groupBy("binlog_file")
-        .agg(F.max("lsn").alias("max_lsn"), F.count("*").alias("rows"))
-        .collect()
-    )
-    return [r.asDict() for r in rows]
-
-
-def batch_stats(events_df) -> tuple[int, list[dict], Any]:
+def batch_stats(events_df, file_col=None) -> tuple[int, list[dict], Any]:
     """ONE aggregate action for everything the per-epoch metrics row needs:
-    (ROWDATA count, per-binlog-file lineage, max execute_ts). Round 3 ran
+    (ROWDATA count, per-binlog-file lineage, max execute_ts) — the
+    reference's per-destination parse-position persistence
+    (parse/.../AbstractEventParser.java:458-485). ``file_col`` replaces the
+    lineage key where file names alone are ambiguous (N shards). Round 3 ran
     these as three separate driver actions against the persisted batch
     (count + lineage agg + lag agg — VERDICT r03 wrong #3); the per-file
     groupBy is metadata-sized (files per epoch), so the globals fold out of
@@ -58,7 +47,8 @@ def batch_stats(events_df) -> tuple[int, list[dict], Any]:
     from pyspark.sql import functions as F
 
     rows = (
-        events_df.groupBy("binlog_file")
+        events_df.groupBy("binlog_file" if file_col is None
+                          else file_col.alias("binlog_file"))
         .agg(F.max("lsn").alias("max_lsn"),
              F.count("*").alias("rows"),
              F.sum(F.when(F.col("entry_type") == "ROWDATA", 1)

@@ -56,13 +56,12 @@ class TxnTailState:
             return self.spark.read.parquet(p)
         return None
 
-    def save(self, tail: DataFrame) -> int:
+    def save(self, tail: DataFrame) -> None:
         p, tmp = self._path(), self._path() + ".tmp"
         tail.coalesce(1).write.mode("overwrite").parquet(tmp)
         if os.path.exists(p):
             shutil.rmtree(p)
         os.replace(tmp, p)
-        return self.spark.read.parquet(p).count()
 
     def clear(self) -> None:
         p = self._path()

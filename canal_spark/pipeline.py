@@ -192,18 +192,12 @@ def apply_dml_range(events: DataFrame, table: LakeTable,
             changes = changes.where(F.col(key).isNotNull())
         net = collapse_lww(changes, key=table.key_col,
                            salt_partitions=salt_partitions)
-    if not views:
-        res = table.merge_apply(net, batch_id=batch_id, max_lsn=hi)
-        if dlq is not None:
-            # a ledger-skipped redelivery applied nothing: report 0 so
-            # cumulative metrics never double-count the same quarantined
-            # rows (the DLQ files themselves are idempotent) — ADVICE r03 #5
-            res["quarantined"] = 0 if res.get("skipped") else n_bad
-        return res
-    net = net.persist()
+    # the collapse shuffle is persisted once only when views reuse it
+    if views:
+        net = net.persist()
     try:
         res = table.merge_apply(net, batch_id=batch_id, max_lsn=hi)
-        for i, v in enumerate(views):
+        for i, v in enumerate(views or []):
             v.apply(net,
                     batch_id=None if batch_id is None else f"{batch_id}/v{i}",
                     max_lsn=hi)
@@ -214,7 +208,8 @@ def apply_dml_range(events: DataFrame, table: LakeTable,
             res["quarantined"] = 0 if res.get("skipped") else n_bad
         return res
     finally:
-        net.unpersist()
+        if views:
+            net.unpersist()
 
 
 def apply_events(events: DataFrame, table: LakeTable,

@@ -34,16 +34,12 @@ apply-if-shape-differs semantics make every clone after the first a no-op.
 from __future__ import annotations
 
 import os
-import time
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from canal_spark.metrics import MetricsLog, batch_lineage
-from canal_spark.operators.transactions import TxnTailState
-from canal_spark.pipeline import apply_events, prepare_envelope
-from canal_spark.streaming.replay import _ENVELOPE_DDL
+from canal_spark.streaming.replay import StreamingReplay
 from canal_spark.table.lake import LakeTable
 
 TS_WIDTH = 20
@@ -116,46 +112,26 @@ def barrier_split(
     return released, tail, fence, present
 
 
-class GroupStreamingReplay:
-    """Tail N sharded binlog directories as one txn-consistent stream."""
+class GroupStreamingReplay(StreamingReplay):
+    """Tail N sharded binlog directories as one txn-consistent stream.
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        log_dirs: list[str],
-        table: LakeTable,
-        checkpoint_dir: str,
-        table_regex: str | None = None,
-        max_files_per_trigger: int = 1,
-        salt_partitions: int | None = None,
-        views: list | None = None,
-        message_sinks: list | None = None,
-        maintenance_every: int | None = None,
-        max_files_per_bucket: int = 8,
-        snapshots_keep: int = 4,
-        hold_missing_sources: int = 0,
-        dlq_dir: str | None = None,
-    ):
-        self.spark = spark
+    The single-source loop (StreamingReplay, whose options it takes apart
+    from ``txn_aligned`` and ``start``) with four overrides: the source
+    (one file stream per shard, tagged ``src_id``), the release step (the
+    timeline barrier and the merged LSN), the lineage key
+    (``src_id/binlog_file`` — shards reuse file names) and the merged LSN
+    on the flushed tail. Message sinks get the BARRIER-RELEASED events
+    with their merged timeline LSN, so downstream consumers see one
+    ordered, txn-consistent stream regardless of shard count."""
+
+    def __init__(self, spark: SparkSession, log_dirs: list[str],
+                 table: LakeTable, checkpoint_dir: str, *,
+                 hold_missing_sources: int = 0, **kw):
+        super().__init__(spark, None, table, checkpoint_dir, **kw)
+        if not self.txn_aligned or self.start_position is not None:
+            raise ValueError("the barrier always releases whole transactions"
+                             " and shards share no start position")
         self.log_dirs = list(log_dirs)
-        self.table = table
-        self.checkpoint_dir = os.path.abspath(checkpoint_dir)
-        self.table_regex = table_regex
-        self.max_files_per_trigger = max_files_per_trigger
-        self.salt_partitions = salt_partitions
-        self.views = list(views or [])
-        # WireMessageSink topics fed the BARRIER-RELEASED events with their
-        # merged timeline LSN — downstream consumers see one ordered,
-        # txn-consistent stream regardless of shard count (the group
-        # parser's whole point); epoch-keyed dirs keep redelivery no-op
-        self.message_sinks = list(message_sinks or [])
-        self.maintenance_every = maintenance_every
-        self.max_files_per_bucket = max_files_per_bucket
-        self.snapshots_keep = snapshots_keep
-        # dead-letter directory for poison winners, same contract as the
-        # single-source stream (pipeline.apply_dml_range dlq)
-        self.dlq_dir = dlq_dir
-        self._data_epochs = 0
         # liveness (ADVICE r02): with K>0, a non-empty source that goes
         # silent holds the barrier fence for up to K consecutive batches
         # before being treated as idle — a lagging live producer is not
@@ -164,123 +140,35 @@ class GroupStreamingReplay:
         # guarantee the final state either way). 0 = drained-replay mode.
         self.hold_missing_sources = hold_missing_sources
         self._missing_streak: dict[int, int] = {}
-        self.tail_state = TxnTailState(
-            spark, os.path.join(self.checkpoint_dir, "txn_tail"))
-        self.metrics = MetricsLog(
-            os.path.join(self.checkpoint_dir, "metrics", "batches.jsonl"))
 
-    # ------------------------------------------------------------ source
     def _read_stream(self) -> DataFrame:
-        from pyspark.sql.types import _parse_datatype_string
-
-        schema = _parse_datatype_string(_ENVELOPE_DDL)
-        streams = [
-            self.spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", self.max_files_per_trigger)
-            .option("pathGlobFilter", "mysql-bin.*.parquet")
-            .option("latestFirst", "false")
-            .parquet(d)
-            .withColumn("src_id", F.lit(i))
-            for i, d in enumerate(self.log_dirs)
-        ]
+        streams = [self._source(d).withColumn("src_id", F.lit(i))
+                   for i, d in enumerate(self.log_dirs)]
         return reduce(lambda a, b: a.unionByName(b), streams)
 
-    # ------------------------------------------------------- batch apply
-    def _apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        t0 = time.time()
-        ev = prepare_envelope(batch_df, table_regex=self.table_regex)
-        ev = self.tail_state.attach(ev)
-        ev = ev.persist()
-        try:
-            require = None
-            if self.hold_missing_sources:
-                require = {
-                    i for i, d in enumerate(self.log_dirs)
-                    if self._missing_streak.get(i, 0) < self.hold_missing_sources
-                    and any(f.endswith(".parquet") for f in os.listdir(d))
-                }
-            released, tail, fence, present = barrier_split(ev, require)
-            if self.hold_missing_sources:
-                for i in range(len(self.log_dirs)):
-                    self._missing_streak[i] = (
-                        0 if i in present
-                        else self._missing_streak.get(i, 0) + 1)
-            released = released.withColumn("lsn", merged_lsn_col())
-            n_rows = released.where(F.col("entry_type") == "ROWDATA").count()
-            lineage = batch_lineage(
-                released.withColumn(
-                    "binlog_file",
-                    F.concat_ws("/", F.col("src_id"), F.col("binlog_file")))
-            ) if n_rows else []
-            stats = apply_events(
-                released, self.table,
-                batch_id=f"epoch-{epoch_id}",
-                salt_partitions=self.salt_partitions,
-                wire=True,
-                views=self.views,
-                dlq=self.dlq_dir,
-            )
-            if n_rows:
-                for s in self.message_sinks:
-                    s.publish(released, f"{epoch_id:09d}")
-            # tail spill AFTER the merge committed (crash ⇒ epoch replays,
-            # ledger no-ops, same tail rebuilt) — native lsn kept, the
-            # merged lsn is recomputed on release
-            self.tail_state.save(tail)
-        finally:
-            ev.unpersist()
-
-        maint = None
-        if self.maintenance_every and n_rows:
-            self._data_epochs += 1
-            if self._data_epochs % self.maintenance_every == 0:
-                maint = {"table": self.table.maintain(
-                    max_files_per_bucket=self.max_files_per_bucket,
-                    snapshots_keep=self.snapshots_keep)}
-                for i, v in enumerate(self.views):
-                    maint[f"view{i}"] = v.table.maintain(
-                        max_files_per_bucket=self.max_files_per_bucket,
-                        snapshots_keep=self.snapshots_keep)
-        self.metrics.append({
-            **({"maintenance": maint} if maint else {}),
-            "epoch": epoch_id,
-            "rows": n_rows,
-            "events_applied": stats.events,
-            "quarantined": sum(m.get("quarantined", 0) for m in stats.merges),
-            "ranges": stats.ranges,
-            "ddls": stats.ddls,
+    def _release(self, ev: DataFrame) -> tuple[DataFrame, DataFrame, dict]:
+        require = None
+        if self.hold_missing_sources:
+            require = {
+                i for i, d in enumerate(self.log_dirs)
+                if self._missing_streak.get(i, 0) < self.hold_missing_sources
+                and any(f.endswith(".parquet") for f in os.listdir(d))
+            }
+        released, tail, fence, present = barrier_split(
+            self.tail_state.attach(ev), require)
+        if self.hold_missing_sources:
+            for i in range(len(self.log_dirs)):
+                self._missing_streak[i] = (
+                    0 if i in present else self._missing_streak.get(i, 0) + 1)
+        # the tail keeps its native lsn: the merged lsn is recomputed on
+        # release
+        return released.withColumn("lsn", merged_lsn_col()), tail, {
             "fence_ts": str(fence) if fence is not None else None,
             "sources": len(self.log_dirs),
-            "lineage": lineage,
-            "batch_sec": time.time() - t0,
-            "table_version": self.table.version,
-        })
+        }
 
-    # -------------------------------------------------------------- run
-    def start(self, available_now: bool = True):
-        writer = (
-            self._read_stream()
-            .writeStream.foreachBatch(self._apply_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        else:
-            writer = writer.trigger(processingTime="1 second")
-        return writer.start()
+    def _lineage_key(self):
+        return F.concat_ws("/", F.col("src_id"), F.col("binlog_file"))
 
-    def run_to_completion(self, timeout_sec: float = 600.0) -> None:
-        q = self.start(available_now=True)
-        q.awaitTermination(timeout_sec)
-        if q.isActive:
-            q.stop()
-
-    def flush_tail(self) -> None:
-        """End-of-log flush: every carried event releases in timeline order
-        (the reference flushes per-parser buffers on stop)."""
-        tail = self.tail_state.load()
-        if tail is None:
-            return
-        apply_events(tail.withColumn("lsn", merged_lsn_col()),
-                     self.table, batch_id=None, wire=True, views=self.views)
-        self.tail_state.clear()
+    def _tail_lsn(self, tail: DataFrame) -> DataFrame:
+        return tail.withColumn("lsn", merged_lsn_col())

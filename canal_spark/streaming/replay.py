@@ -113,7 +113,8 @@ class StreamingReplay:
             os.path.join(self.checkpoint_dir, "metrics", "batches.jsonl"))
 
     # ------------------------------------------------------------ source
-    def _read_stream(self) -> DataFrame:
+    def _source(self, log_dir: str) -> DataFrame:
+        """One file stream over a binlog directory, in file-name order."""
         from pyspark.sql.types import _parse_datatype_string
 
         return (
@@ -121,8 +122,11 @@ class StreamingReplay:
             .option("maxFilesPerTrigger", self.max_files_per_trigger)
             .option("pathGlobFilter", "mysql-bin.*.parquet")
             .option("latestFirst", "false")
-            .parquet(self.log_dir)
+            .parquet(log_dir)
         )
+
+    def _read_stream(self) -> DataFrame:
+        return self._source(self.log_dir)
 
     # ------------------------------------------------------- batch apply
     def _apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
@@ -131,17 +135,14 @@ class StreamingReplay:
             batch_df = batch_df.where(self.start_position.predicate())
         # keep txn markers: the boundary split needs TRANSACTIONEND rows
         ev = prepare_envelope(batch_df, table_regex=self.table_regex)
-        if self.txn_aligned:
-            ev = self.tail_state.attach(ev)
-            complete, tail, cut = split_at_txn_boundary(ev)
-        else:
-            complete, tail, cut = ev, None, None
+        complete, tail, release = self._release(ev)
 
         complete = complete.persist()
         try:
             # ONE aggregate for rowdata count + lineage + lag timestamp
             # (was three separate actions per epoch, VERDICT r03 wrong #3)
-            n_rows, lineage, max_ts = batch_stats(complete)
+            n_rows, lineage, max_ts = batch_stats(complete,
+                                                  self._lineage_key())
             if not n_rows:
                 lineage = []
             stats = self._apply(complete, epoch_id)
@@ -150,7 +151,7 @@ class StreamingReplay:
                     s.publish(complete, f"{epoch_id:09d}")
             # tail spill AFTER the merge committed: a crash in between
             # replays the epoch (ledger no-op) and rebuilds the same tail
-            if self.txn_aligned and tail is not None:
+            if tail is not None:
                 self.tail_state.save(tail)
         finally:
             complete.unpersist()
@@ -164,7 +165,7 @@ class StreamingReplay:
             "quarantined": sum(m.get("quarantined", 0) for m in stats.merges),
             "ranges": stats.ranges,
             "ddls": stats.ddls,
-            "cut_lsn": cut,
+            **release,
             "lag_sec": (
                 time.time() - max_ts.timestamp()
                 if max_ts is not None else None
@@ -173,6 +174,26 @@ class StreamingReplay:
             "batch_sec": time.time() - t0,
             "table_version": self._sink_version(),
         })
+
+    # ------------------------------------------------ release hooks
+    # (overridden by GroupStreamingReplay with the N-source barrier)
+    def _release(self, ev: DataFrame) -> tuple[DataFrame, DataFrame | None,
+                                                dict]:
+        """(complete, tail, metrics fields): the events this epoch applies,
+        the incomplete tail to carry (None: nothing carries) and the
+        release point for the metrics row."""
+        if not self.txn_aligned:
+            return ev, None, {"cut_lsn": None}
+        complete, tail, cut = split_at_txn_boundary(self.tail_state.attach(ev))
+        return complete, tail, {"cut_lsn": cut}
+
+    def _lineage_key(self):
+        """Lineage grouping column; None groups by ``binlog_file``."""
+        return None
+
+    def _tail_lsn(self, tail: DataFrame) -> DataFrame:
+        """The carried tail as ``flush_tail`` applies and publishes it."""
+        return tail
 
     # --------------------------------------------------- sink hooks
     # (overridden by MirrorStreamingReplay to fan into a LakeDatabase)
@@ -238,6 +259,7 @@ class StreamingReplay:
         tail = self.tail_state.load()
         if tail is None:
             return
+        tail = self._tail_lsn(tail)
         # no batch id: the LSN fence alone makes a re-flush idempotent, and a
         # constant id would wrongly skip flushes of NEW tails in later runs
         self._apply(tail, epoch_id=None)

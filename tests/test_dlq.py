@@ -46,6 +46,30 @@ def _wire_events(spark, rows):
          for et, lsn, b, a, pb, pa in rows], _WIRE_DDL)
 
 
+def write_poison_segment(spark, tmp_work, wire_dir):
+    """Append a two-row wire segment after the log, with no transaction
+    markers: a corrupt payload for a new key and an insert with no key."""
+    poison = _wire_events(spark, [
+        ("UPDATE", "z-lsn-poison-1", None, '{"doc_id":"zzz-new","tokens":[1,',
+         "zzz-new", "zzz-new"),
+        ("INSERT", "z-lsn-poison-2", None, '{"n_tok":1}', None, None),
+    ]).withColumn("gtid_seq", F.lit(10 ** 9).cast("long")) \
+      .withColumn("binlog_file", F.lit("mysql-bin.999999")) \
+      .withColumn("binlog_pos", F.lit(4).cast("long")) \
+      .withColumn("server_id", F.lit(1).cast("long")) \
+      .withColumn("execute_ts", F.current_timestamp()) \
+      .withColumn("schema_name", F.lit("train")) \
+      .withColumn("table_name", F.lit("tokseq")) \
+      .withColumn("txn_id", F.lit("txp")) \
+      .withColumn("sql", F.lit(None).cast("string")) \
+      .drop("lsn")
+    tmp = os.path.join(tmp_work, "_poison")
+    poison.coalesce(1).write.parquet(tmp)
+    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+    os.replace(os.path.join(tmp, part),
+               os.path.join(wire_dir, "mysql-bin.999999.parquet"))
+
+
 def test_wire_quarantine_corrupt_and_unroutable(spark, tmp_work):
     df = spark.createDataFrame(BASE, SCHEMA)
     t = LakeTable.create(spark, os.path.join(tmp_work, "t"), SCHEMA,
@@ -104,25 +128,7 @@ def test_streaming_dlq_metrics_and_state(spark, tmp_work):
     # poison: an extra segment AFTER the log with two bad winners for keys
     # the clean log never deletes — quarantining them must leave the final
     # state exactly the clean-log oracle state
-    poison = _wire_events(spark, [
-        ("UPDATE", "z-lsn-poison-1", None, '{"doc_id":"zzz-new","tokens":[1,',
-         "zzz-new", "zzz-new"),
-        ("INSERT", "z-lsn-poison-2", None, '{"n_tok":1}', None, None),
-    ]).withColumn("gtid_seq", F.lit(10 ** 9).cast("long")) \
-      .withColumn("binlog_file", F.lit("mysql-bin.999999")) \
-      .withColumn("binlog_pos", F.lit(4).cast("long")) \
-      .withColumn("server_id", F.lit(1).cast("long")) \
-      .withColumn("execute_ts", F.current_timestamp()) \
-      .withColumn("schema_name", F.lit("train")) \
-      .withColumn("table_name", F.lit("tokseq")) \
-      .withColumn("txn_id", F.lit("txp")) \
-      .withColumn("sql", F.lit(None).cast("string")) \
-      .drop("lsn")
-    tmp = os.path.join(tmp_work, "_poison")
-    poison.coalesce(1).write.parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    os.replace(os.path.join(tmp, part),
-               os.path.join(wire_dir, "mysql-bin.999999.parquet"))
+    write_poison_segment(spark, tmp_work, wire_dir)
 
     bdf = spark.createDataFrame(base.to_pandas(), SCHEMA)
     table = LakeTable.create(spark, os.path.join(tmp_work, "tokseq"), SCHEMA,

@@ -5,6 +5,7 @@ the merged-timeline sequential oracle."""
 import os
 
 import pyarrow as pa
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -74,6 +75,20 @@ def test_group_streaming_merges_shards(spark, tmp_work):
     assert all(m["sources"] == 2 for m in lines)
     # the stream applied incrementally, not only at the final flush
     assert sum(m["events_applied"] for m in lines) > 0
+    # one loop, one metrics row: the single-source fields plus the barrier's
+    single = {"epoch", "rows", "events_applied", "quarantined", "ranges",
+              "ddls", "lag_sec", "lineage", "batch_sec", "table_version"}
+    assert all(single | {"fence_ts", "sources"} <= set(m) for m in lines)
+    # shards reuse binlog file names: lineage keys carry the source id
+    keys = [x["binlog_file"] for m in lines for x in m["lineage"]]
+    assert keys and {k.split("/", 1)[0] for k in keys} == {"0", "1"}
+    assert all(k.split("/", 1)[1].startswith("mysql-bin.") for k in keys)
+    # the barrier owns the release step: the single-source options that
+    # would bypass it are refused
+    for bad in ({"txn_aligned": False}, {"start": object()}):
+        with pytest.raises(ValueError):
+            GroupStreamingReplay(spark, wires, table,
+                                 os.path.join(tmp_work, "ckpt_bad"), **bad)
 
 
 def test_group_streaming_with_sharded_ddl(spark, tmp_work):
@@ -205,3 +220,35 @@ def test_group_streaming_with_attached_view(spark, tmp_work):
     got = {r["doc_id"]: r.asDict()
            for r in view.table.refresh().read().collect()}
     assert_state_equal(got, exp_index, INDEX_COLS)
+
+
+def test_group_tail_flush_quarantines_and_publishes(spark, tmp_work):
+    """A poison segment with no TRANSACTIONEND at the end of a shard stays
+    in the carried tail until flush_tail. The flush runs the same apply as
+    an epoch: poison rows land in the DLQ (not upserted as NULL rows) and
+    the tail is published to the topic."""
+    from canal_spark.pipeline import prepare_envelope, read_dlq, read_event_log
+    from canal_spark.sinks import WireMessageSink
+    from tests.test_dlq import write_poison_segment
+
+    bases, typed, wires, table = _setup_shards(
+        spark, tmp_work, events_per_shard=[600, 400], seed=58)
+    write_poison_segment(spark, tmp_work, wires[0])
+    sink = WireMessageSink(os.path.join(tmp_work, "topic"), 4)
+    dlq = os.path.join(tmp_work, "dlq")
+    gr = GroupStreamingReplay(spark, wires, table,
+                              os.path.join(tmp_work, "ckpt"),
+                              max_files_per_trigger=1, message_sinks=[sink],
+                              dlq_dir=dlq)
+    gr.run_to_completion()
+    gr.flush_tail()
+    _check(table.refresh(), bases, typed)
+    assert read_dlq(spark, dlq).count() == 2
+    n_dml = sum(
+        prepare_envelope(read_event_log(spark, d)).where(
+            (F.col("entry_type") == "ROWDATA")
+            & ~F.coalesce(F.col("is_ddl"), F.lit(False))
+            & F.col("event_type").isin("INSERT", "UPDATE", "DELETE")
+        ).count()
+        for d in typed)
+    assert sink.read(spark).count() == n_dml + 2
