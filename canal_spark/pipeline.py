@@ -128,10 +128,11 @@ def apply_dml_range(events: DataFrame, table: LakeTable,
                     dlq: str | None = None) -> dict:
     """LWW-collapse + MERGE the DML events with lo < lsn ≤ hi.
 
-    ``views``: JoinedView instances maintained from the SAME net-change set
-    in the same range (the ES-adapter denormalized-sync analog,
-    client-adapter/escore/.../ESSyncService.java:458-492) — the collapse
-    shuffle is persisted once and reused for every sink.
+    ``views``: :class:`~canal_spark.views.View` instances maintained from
+    the SAME net-change set in the same range (the ES-adapter
+    denormalized-sync analog, client-adapter/escore/.../
+    ESSyncService.java:458-492) — the collapse shuffle is persisted once
+    and reused for every view.
 
     ``dlq``: dead-letter directory. When set, poison EVENTS (unroutable
     key, corrupt or missing wire payload) are screened out BEFORE the LWW
@@ -273,19 +274,12 @@ def apply_events(events: DataFrame, table: LakeTable,
         stats.merges.append(res)
         stats.ranges += 1
         applied = tracker.apply_ddl(sql, ddl_lsn)
-        # TRUNCATE wipes the main table metadata-only; mirrored views hold
-        # rows derived from it, so the same fence propagates to each
+        # TRUNCATE wipes the main table metadata-only; views hold rows
+        # derived from it, so the same fence propagates to each
         for cmd in applied:
             if cmd.kind == "TRUNCATE":
                 for v in views or []:
-                    # views derived 1:1 from main rows wipe with it; views
-                    # whose ROWS outlive the main data (ChildAggView's
-                    # parents) override on_source_truncate to reset their
-                    # derived columns instead
-                    if hasattr(v, "on_source_truncate"):
-                        v.on_source_truncate(ddl_lsn)
-                    else:
-                        v.table.truncate(lsn=ddl_lsn)
+                    v.on_source_truncate(ddl_lsn)
         stats.ddls += 1
         lo = ddl_lsn
     res = apply_dml_range(

@@ -80,8 +80,8 @@ class StreamingReplay:
         self.max_files_per_trigger = max_files_per_trigger
         self.salt_partitions = salt_partitions
         self.txn_aligned = txn_aligned
-        # JoinedView sinks maintained inside the same foreachBatch
-        # (ES-adapter denormalized sync — see canal_spark/views.py)
+        # derived views (canal_spark/views.View) maintained inside the same
+        # foreachBatch (ES-adapter denormalized sync)
         self.views = list(views or [])
         # WireMessageSink file topics published per epoch (MQ delivery
         # analog, canal_spark/sinks.py) — epoch-keyed directories make

@@ -676,27 +676,8 @@ class LakeTable:
             for f in replaced:
                 file_stats.pop(f, None)
             file_stats.update(new_stats)
-            snap = dict(self.snap)
-            snap.update(version=version, files=files, file_stats=file_stats,
-                        parent=self.snap["version"])
-            # posting-table freshness chain (views.py): this data commit
-            # may land join values in new buckets — a posting map not yet
-            # folded up to prev_pairs_version must rebuild, one folded to
-            # it extends incrementally
-            snap["prev_pairs_version"] = int(snap.get("pairs_version", 0))
-            snap["pairs_version"] = version
-            if batch_id is not None:
-                snap["applied_batches"] = _ledger_add(
-                    snap["applied_batches"], batch_id)
-            obs_lsn = max((r["mx"] for r in bstats if r["mx"]), default=None)
-            wm = max(filter(None, [max_lsn, obs_lsn]), default=None)
-            if wm:
-                snap["watermark_lsn"] = max(snap.get("watermark_lsn", ""), wm)
-            if self.snap.get("changelog_enabled"):
-                snap["changelog"] = dict(self.snap.get("changelog", {}))
-                snap["changelog"][str(version)] = self._write_changelog(
-                    chg, data_cols, version)
-            self._write_snapshot(snap)
+            self._commit_merge(version, chg, bstats, batch_id, max_lsn,
+                               files=files, file_stats=file_stats)
             return {"skipped": False, "version": version, "mode": "cow",
                     "buckets": len(touched), "upserts": n_up, "deletes": n_del,
                     "files_read": len(touched_files),
@@ -741,10 +722,26 @@ class LakeTable:
             deltas[b] = deltas.get(b, []) + fl
         file_stats = dict(self.snap.get("file_stats", {}))
         file_stats.update(new_stats)
+        self._commit_merge(version, chg, bstats, batch_id, max_lsn,
+                           deltas=deltas, file_stats=file_stats)
+        return {"skipped": False, "version": version, "mode": "mor",
+                "buckets": len(touched), "upserts": n_up, "deletes": n_del,
+                "files_read": 0, "files_carried": bucket_files,
+                "delta_files": sum(len(fl) for fl in new_files.values())}
+
+    def _commit_merge(self, version: int, chg: DataFrame, bstats: list,
+                      batch_id: str | None, max_lsn: str | None,
+                      **updates) -> None:
+        """The snapshot commit both merge modes end in: ``updates`` (the
+        mode's new file lists) plus the bookkeeping every data commit
+        carries — parent link, posting-map freshness chain, ledger,
+        watermark and, when enabled, the change feed."""
         snap = dict(self.snap)
-        snap.update(version=version, deltas=deltas, file_stats=file_stats,
-                    parent=self.snap["version"])
-        # posting-table freshness chain — see the CoW commit path
+        snap.update(updates, version=version, parent=self.snap["version"])
+        # posting-table freshness chain (views.py): this data commit may
+        # land join values in new buckets — a posting map not yet folded up
+        # to prev_pairs_version must rebuild, one folded to it extends
+        # incrementally
         snap["prev_pairs_version"] = int(snap.get("pairs_version", 0))
         snap["pairs_version"] = version
         if batch_id is not None:
@@ -757,22 +754,17 @@ class LakeTable:
         if self.snap.get("changelog_enabled"):
             snap["changelog"] = dict(self.snap.get("changelog", {}))
             snap["changelog"][str(version)] = self._write_changelog(
-                chg, data_cols, version)
+                chg, version)
         self._write_snapshot(snap)
-        return {"skipped": False, "version": version, "mode": "mor",
-                "buckets": len(touched), "upserts": n_up, "deletes": n_del,
-                "files_read": 0, "files_carried": bucket_files,
-                "delta_files": sum(len(fl) for fl in new_files.values())}
 
     # -------------------------------------------------------- change feed
-    def _write_changelog(self, chg: DataFrame, data_cols: list[str],
-                         version: int) -> str:
+    def _write_changelog(self, chg: DataFrame, version: int) -> str:
         """Land this commit's submitted net batch under ``changelog/`` —
         O(batch) extra write, only when the table was created with
         ``changelog=True``."""
         rel = f"v{version:08d}"
         out = chg.select(
-            *[F.col(f"_c_{c}").alias(c) for c in data_cols],
+            *[F.col(f"_c_{c}").alias(c) for c in self.logical_columns()],
             F.col("_c_op").alias("op"),
             F.col("_c_lsn").alias("lsn"),
             F.lit(version).cast("int").alias("_commit_version"),

@@ -19,8 +19,7 @@ Example (all kinds)::
       - name: enriched            # → {base_dir}/{name}
         kind: multi_joined        # joined | multi_joined | filtered |
                                   # child_agg | agg_rollup |
-                                  # fingerprint_index | pack_index |
-                                  # minhash_index
+                                  # fingerprint_index | pack_index
         key: doc_id
         n_buckets: 8
         columns: "doc_id string, n_tok int, source string,
@@ -61,14 +60,12 @@ from pyspark.sql import types as T
 
 from canal_spark.table.lake import LakeTable
 from canal_spark.views import (AggRollupView, ChildAggView, FilteredView,
-                               JoinedView, MinhashBandIndexView,
                                MultiJoinedView, PackIndexView,
                                agg_rollup_frame, fingerprint_index_view,
                                pack_index_frame)
 
 VIEW_KINDS = ("joined", "multi_joined", "filtered", "child_agg",
-              "agg_rollup", "fingerprint_index", "pack_index",
-              "minhash_index")
+              "agg_rollup", "fingerprint_index", "pack_index")
 
 
 def load_view_config(src) -> dict:
@@ -127,14 +124,15 @@ def build_views(spark: SparkSession, cfg, main: LakeTable,
         nb = int(spec.get("n_buckets", 8))
 
         if kind in ("joined", "multi_joined"):
+            # one view over all the declared dims: they are all seeded, so
+            # they must all be maintained
             dims = [(_dim_df(spark, d), d["on"]) for d in spec["dims"]]
             schema = _schema(spec["columns"])
             seed = main_df
             for d, on in dims:
                 seed = seed.join(F.broadcast(d), on, "left")
             vt = _open_or_create(spark, path, schema, key, nb, seed)
-            out.append(JoinedView(vt, dims[0][0], dims[0][1])
-                       if kind == "joined" else MultiJoinedView(vt, dims))
+            out.append(MultiJoinedView(vt, dims))
         elif kind == "filtered":
             schema = _schema(spec["columns"])
             it = ({f.name: f.dataType
@@ -158,11 +156,10 @@ def build_views(spark: SparkSession, cfg, main: LakeTable,
         elif kind == "child_agg":
             fk = spec["fk"]
             sums = tuple(spec.get("sums", ("n_tok",)))
-            parents = _dim_df(spark, {
-                k: spec[k] for k in ("parquet", "rows", "ddl")
-                if k.replace("parquet", "parents_parquet") in spec
-                or k in spec} if "rows" in spec
-                else {"parquet": spec["parents_parquet"]})
+            # inline ``rows`` (+ ``ddl``) win over ``parents_parquet``
+            parents = _dim_df(spark, (
+                {"rows": spec["rows"], "ddl": spec["ddl"]} if "rows" in spec
+                else {"parquet": spec["parents_parquet"]}))
             pkey = spec.get("key", fk)
             schema = T.StructType(
                 [f for f in parents.schema.fields]
@@ -196,18 +193,4 @@ def build_views(spark: SparkSession, cfg, main: LakeTable,
                                     shard_chars=shard_chars)
             vt = _open_or_create(spark, path, schema, key, nb, seed)
             out.append(PackIndexView(vt, seq_len, shard_chars=shard_chars))
-        elif kind == "minhash_index":
-            view_nb = int(spec.get("n_buckets", 8))
-            schema = _schema("idx_key string, doc_id string, band int, "
-                             "band_hash string")
-            vt = _open_or_create(spark, path, schema,
-                                 spec.get("key", "idx_key"), view_nb, None)
-            view = MinhashBandIndexView(
-                vt, n=int(spec.get("n", 3)),
-                num_hashes=int(spec.get("num_hashes", 64)),
-                bands=int(spec.get("bands", 8)))
-            if vt.snap["version"] == 0:
-                vt.overwrite(view.index_frame(main_df),
-                             batch_id="viewconfig/seed")
-            out.append(view)
     return out

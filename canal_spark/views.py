@@ -1,4 +1,4 @@
-"""Incrementally-maintained denormalized join views (ES adapter analog).
+"""Incrementally-maintained derived views (ES adapter analog).
 
 The reference's ElasticSearch adapter keeps a denormalized document per
 main-table row and patches it on EVERY DML: one-to-one joins are resolved at
@@ -16,6 +16,13 @@ the view table's own ledger + LSN fence (deletes and pk-changes arrive as
 the same D/U net rows the main table sees, so the view can never diverge
 under replays).
 
+One protocol for every view (the reference's generic sync service applying
+each mapping, not one service per mapping): a :class:`View` derives its
+rows from the batch's net changes in ``apply`` and hands them to one merge
+path (``_merge_derived``: derived upserts plus one key-only tombstone per
+net delete, one ``merge_apply``), and wipes with the source on TRUNCATE
+unless it overrides ``on_source_truncate``.
+
 Dim-side changes (the one-to-many direction, ESSyncService
 joinTableSimpleFieldOperation): ``apply_dim_changes`` re-enriches exactly
 the view rows whose join key changed — a semi-join against the view scan,
@@ -32,78 +39,139 @@ from typing import Callable
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from canal_spark.table.lake import LakeTable
+from canal_spark.lsn import ZERO_LSN
+from canal_spark.table.lake import LakeTable, _ledger_add
 
 
-class JoinedView:
-    """A denormalized view ``main ⨝ dim`` maintained from CDC net changes.
+class View:
+    """The derived-view protocol ``replay(..., views=[...])``,
+    ``StreamingReplay`` and the curation sweeps drive: ``table`` is the
+    view's own :class:`LakeTable`; ``apply(net_changes, batch_id,
+    max_lsn)`` folds one batch of net-effect changes (key + data cols + op
+    + lsn, one row per key) into it; ``on_source_truncate(lsn)`` follows a
+    TRUNCATE of the source table."""
+
+    table: LakeTable
+
+    def apply(self, net_changes: DataFrame, batch_id: str | None = None,
+              max_lsn: str | None = None) -> dict:
+        raise NotImplementedError
+
+    def on_source_truncate(self, lsn: str) -> None:
+        """Views derived 1:1 from source rows wipe with them, fenced at the
+        TRUNCATE's LSN; views whose rows outlive the source data override
+        this (ChildAggView's parents)."""
+        self.table.truncate(lsn=lsn)
+
+
+def _with_inputs(net: DataFrame, input_types: dict) -> DataFrame:
+    """``net`` plus a typed NULL column for each ``input_types`` column it
+    lacks — a view's mapping is versioned separately from the source, so a
+    column renamed/dropped by DDL mid-stream simply stops arriving."""
+    present = set(net.columns)
+    return net.select("*", *[F.lit(None).cast(t).alias(c)
+                             for c, t in input_types.items()
+                             if c not in present])
+
+
+def _merge_derived(table: LakeTable, net: DataFrame, ups: DataFrame,
+                   batch_id: str | None, max_lsn: str | None) -> dict:
+    """The one merge path of the derived views: ``ups`` (the rows derived
+    from the batch — view columns + op + lsn) plus one key-only tombstone
+    per net ``D`` row, in one ``merge_apply``. The tombstones' other
+    columns are typed NULLs: a delete NULLs every non-key column anyway."""
+    cols = table.logical_columns()
+    key = table.key_col
+    ups = ups.select(*cols, "op", "lsn")
+    types = {f.name: f.dataType for f in ups.schema.fields}
+    dels = net.where(F.col("op") == "D").select(
+        F.col(key),
+        *[F.lit(None).cast(types[c]).alias(c) for c in cols if c != key],
+        "op", "lsn")
+    return table.merge_apply(ups.unionByName(dels), batch_id=batch_id,
+                             max_lsn=max_lsn)
+
+
+def _ledger_only(table: LakeTable, batch_id: str | None, **out) -> dict:
+    """A batch that changes no view row: land its ledger entry (so a
+    redelivery skips) without a data commit."""
+    if batch_id is not None:
+        table._commit_meta(applied_batches=_ledger_add(
+            table.snap["applied_batches"], batch_id))
+    return {"skipped": False, **out}
+
+
+class JoinedView(View):
+    """A denormalized view ``main ⨝ dim1 ⨝ dim2 ⨝ …`` maintained from CDC
+    net changes — the reference ES adapter's join mapping, one document
+    assembled from the main row plus the joined tables
+    (client-adapter/escore/.../ESSyncService.java:699-812 whole-SQL
+    re-query). ``JoinedView(vt, dim, on)`` joins one dim;
+    :class:`MultiJoinedView` is the same view over N dims.
 
     ``view_table``'s logical schema fixes the mapping (the ES index mapping
-    analog): main-table columns the view keeps, plus ``dim``'s payload
+    analog): main-table columns the view keeps, plus the dims' payload
     columns. Main-table DDL does NOT alter the view (a serving mapping is
     versioned separately) — post-DDL changes simply project onto the view's
     column set.
+
+    Main-change direction: each batch's net upserts enrich through EVERY
+    broadcast dim in one pass (N broadcast hash joins, zero extra
+    shuffles); deletes tombstone.
+
+    Dim-change direction: ``apply_dim_changes`` re-enriches exactly the
+    view rows joining the changed keys of one dim THROUGH ALL dims (the
+    whole-SQL re-query, row-scoped). Each dim keeps its own bucket posting
+    map so the refresh reads only the touched buckets.
     """
 
     def __init__(self, view_table: LakeTable, dim: DataFrame, on: str):
         self.table = view_table
-        self.dim = dim
-        self.on = on  # join column, present in both main changes and dim
+        # [(dim_df, on_col), …]: each dim joins the main row on its own
+        # column, present in both the main changes and the dim
+        self.dims = [(dim, on)]
 
-    def _split_cols(self) -> tuple[list[str], list[str]]:
-        dim_payload = [c for c in self.dim.columns if c != self.on]
-        main_cols = [c for c in self.table.logical_columns()
-                     if c not in dim_payload]
-        return main_cols, dim_payload
+    @property
+    def dim(self) -> DataFrame:
+        return self.dims[0][0]
+
+    @dim.setter
+    def dim(self, new_dim: DataFrame) -> None:
+        self.dims[0] = (new_dim, self.dims[0][1])
+
+    def _main_cols(self) -> list[str]:
+        payload = {c for d, on in self.dims for c in d.columns if c != on}
+        return [c for c in self.table.logical_columns() if c not in payload]
 
     # dim-key posting map: {on_value: [view buckets holding live rows with
     # that value]} — a side file beside the view data so apply_dim_changes
     # can prune its view read to the touched buckets instead of scanning
     # the whole view (VERDICT r03 wrong #4: the broadcast semi-join pruned
     # ROWS but not FILES, because `on` is not the key and file key-stats
-    # don't apply). Shared helpers (_ensure_on_postings/_extend_on_postings
-    # below) — one idiom for JoinedView and MultiJoinedView.
+    # don't apply). One map per dim column (helpers below).
 
     def apply(self, net_changes: DataFrame, batch_id: str | None = None,
               max_lsn: str | None = None) -> dict:
         """MERGE one batch of net-effect changes (key + data cols + op +
         lsn, one row per key) into the view, enriching upserts with the
-        broadcast dim. Runs inside the same foreachBatch as the main-table
+        broadcast dims. Runs inside the same foreachBatch as the main-table
         merge — the two tables commit independently but both are fenced by
         the same per-key LSNs, so a crash between them replays into no-ops.
         """
-        main_cols, dim_payload = self._split_cols()
-        dim_types = {f.name: f.dataType for f in self.dim.schema.fields}
-        # the view's mapping is versioned separately from the main table, so
-        # a main column renamed/dropped by DDL mid-stream simply stops
-        # arriving: project what the batch carries, NULL-fill the rest
-        present = set(net_changes.columns)
+        main_cols = self._main_cols()
         view_types = self.table.schema()
-        sel_main = [
-            F.col(c) if c in present
-            else F.lit(None).cast(view_types[c].dataType).alias(c)
-            for c in main_cols
-        ]
-
-        ups = (
-            net_changes.where(F.col("op") == "U")
-            .select(*sel_main, "op", "lsn")
-            .join(F.broadcast(self.dim), on=self.on, how="left")
-        )
-        dels = net_changes.where(F.col("op") == "D").select(
-            *sel_main,
-            *[F.lit(None).cast(dim_types[c]).alias(c) for c in dim_payload],
-            "op", "lsn",
-        )
-        cols = self.table.logical_columns()
-        enriched = ups.select(*cols, "op", "lsn").unionByName(
-            dels.select(*cols, "op", "lsn"))
-        res = self.table.merge_apply(enriched, batch_id=batch_id,
-                                     max_lsn=max_lsn)
+        ups = _with_inputs(
+            net_changes.where(F.col("op") == "U"),
+            {c: view_types[c].dataType for c in main_cols},
+        ).select(*main_cols, "op", "lsn")
+        for d, on in self.dims:
+            ups = ups.join(F.broadcast(d), on=on, how="left")
+        res = _merge_derived(self.table, net_changes, ups, batch_id, max_lsn)
         # ALSO on ledger-skipped redelivery: the extension is idempotent,
         # and a crash between the data commit and the postings write is
         # repaired exactly by the replayed (skipped) epoch
-        _extend_on_postings(self.table, self.on, ups)
+        for _d, on in self.dims:
+            _extend_on_postings(self.table, on, ups)
         return res
 
     def apply_dim_changes(self, new_dim: DataFrame,
@@ -112,7 +180,14 @@ class JoinedView:
         """One-to-many direction: the DIM changed, so re-enrich the view
         rows that join to the changed dim keys (ESSyncService sub-table
         update analog). ``changed_keys``: one-column DF of ``on`` values
-        that changed (defaults to all of ``new_dim`` — full dim refresh).
+        that changed (defaults to all of ``new_dim`` — full dim refresh)."""
+        return self._refresh_dim(0, new_dim, changed_keys, batch_id)
+
+    def _refresh_dim(self, i: int, new_dim: DataFrame,
+                     changed_keys: DataFrame | None,
+                     batch_id: str | None) -> dict:
+        """Swap in dim ``i`` and re-enrich the view rows joining its
+        changed keys through all dims.
 
         The view scan is filtered by the changed keys FIRST (broadcast
         semi-join — pushes to the scan), so cost is O(rows joining the
@@ -129,148 +204,63 @@ class JoinedView:
         — ``'' || '~d'`` would sort after every real LSN and fence the row
         forever.
         """
-        self.dim = new_dim
-        keys = changed_keys if changed_keys is not None else new_dim.select(self.on)
-        main_cols, _ = self._split_cols()
+        on = self.dims[i][1]
+        self.dims[i] = (new_dim, on)
+        keys = changed_keys if changed_keys is not None else new_dim.select(on)
         # prune FILES, not just rows: the posting table says which view
         # buckets hold rows joining the changed dim keys (bootstrap scan
         # once, then maintained per batch). Only BUCKET IDS ever reach the
         # driver — the key domain stays on the executors.
-        bks = _postings_buckets(self.table, self.on, keys)
+        bks = _postings_buckets(self.table, on, keys)
         if not bks:
             # no live view row joins any changed dim key
             return {"skipped": False, "refreshed": 0}
-        affected = (
-            self.table.read_raw(buckets=bks)
-            .where(~F.coalesce(F.col("_deleted"), F.lit(False)))
-            .join(F.broadcast(keys.distinct()), on=self.on, how="leftsemi")
-            .select(*main_cols, "_source_lsn")
-        )
-        from canal_spark.lsn import ZERO_LSN
-
-        floor_lsn = F.coalesce(
-            F.nullif(F.col("_source_lsn"), F.lit("")), F.lit(ZERO_LSN))
         refreshed = (
-            affected.join(F.broadcast(new_dim), on=self.on, how="left")
-            .select(*self.table.logical_columns(),
-                    F.concat(floor_lsn, F.lit("~d")).alias("lsn"))
-            .withColumn("op", F.lit("U"))
-        )
-        res = self.table.merge_apply(refreshed, batch_id=batch_id)
-        # a dim refresh rewrites dim PAYLOAD on existing rows — keys (so
-        # buckets) and the `on` column are untouched, so no (value, bucket)
-        # pair can appear or move: advance the map's as_of past this data
-        # commit without touching the pairs (else the next lookup would
-        # needlessly re-bootstrap the whole map after every dim refresh)
-        _touch_on_postings(self.table, self.on)
-        return res
-
-
-class MultiJoinedView:
-    """A denormalized view ``main ⨝ dim1 ⨝ dim2 ⨝ …`` maintained from CDC
-    net changes — the reference ES adapter's MULTI-TABLE mapping (one
-    document assembled from the main row plus several joined tables,
-    client-adapter/escore/.../ESSyncService.java:699-812 whole-SQL
-    re-query). Round-3 JoinedView covers exactly one dim; a view derived
-    from several dims previously needed hand composition (VERDICT r03
-    missing #2).
-
-    ``dims``: ordered ``[(dim_df, on_col), …]`` — each dim joins the main
-    row on its own column; dim payload columns must be disjoint from each
-    other and from the main columns (the ES mapping's flat document).
-
-    Main-change direction: each batch's net upserts enrich through EVERY
-    broadcast dim in one pass (N broadcast hash joins, zero extra
-    shuffles), deletes tombstone — the same merge/fence contract as
-    JoinedView, so it plugs into the same ``views=[...]`` hooks.
-
-    Dim-change direction: ``apply_dim_changes(i, new_dim, changed_keys)``
-    re-enriches exactly the view rows joining the changed keys of dim
-    ``i`` THROUGH ALL dims (the whole-SQL re-query, row-scoped), with the
-    same own-LSN ``~d`` stamping as JoinedView so the refresh wins against
-    the row it read but never against a later main-table event. Each dim
-    keeps its own bucket posting map (``dim_postings:{on}`` in the view
-    snapshot) so the refresh reads only the touched buckets.
-    """
-
-    def __init__(self, view_table: LakeTable, dims: list):
-        self.table = view_table
-        self.dims = [(d, on) for d, on in dims]
-        payload_cols: list[str] = []
-        for d, on in self.dims:
-            payload_cols += [c for c in d.columns if c != on]
-        dupes = {c for c in payload_cols if payload_cols.count(c) > 1}
-        if dupes:
-            raise ValueError(f"dim payload columns must be disjoint: {dupes}")
-        self._payload = payload_cols
-
-    def _main_cols(self) -> list[str]:
-        return [c for c in self.table.logical_columns()
-                if c not in self._payload]
-
-    def apply(self, net_changes: DataFrame, batch_id: str | None = None,
-              max_lsn: str | None = None) -> dict:
-        main_cols = self._main_cols()
-        view_types = self.table.schema()
-        present = set(net_changes.columns)
-        sel_main = [
-            F.col(c) if c in present
-            else F.lit(None).cast(view_types[c].dataType).alias(c)
-            for c in main_cols
-        ]
-        ups = net_changes.where(F.col("op") == "U").select(*sel_main, "op", "lsn")
-        for d, on in self.dims:
-            ups = ups.join(F.broadcast(d), on=on, how="left")
-        dels = net_changes.where(F.col("op") == "D").select(
-            *sel_main,
-            *[F.lit(None).cast(view_types[c].dataType).alias(c)
-              for c in self._payload],
-            "op", "lsn")
-        cols = self.table.logical_columns()
-        res = self.table.merge_apply(
-            ups.select(*cols, "op", "lsn")
-            .unionByName(dels.select(*cols, "op", "lsn")),
-            batch_id=batch_id, max_lsn=max_lsn)
-        # ALSO on ledger-skipped redelivery — idempotent crash repair of
-        # the side-file map (see the posting helpers' docstring)
-        for _d, on in self.dims:
-            _extend_on_postings(self.table, on, ups)
-        return res
-
-    def apply_dim_changes(self, dim_index: int, new_dim: DataFrame,
-                          changed_keys: DataFrame | None = None,
-                          batch_id: str | None = None) -> dict:
-        from canal_spark.lsn import ZERO_LSN
-
-        d_old, on = self.dims[dim_index]
-        self.dims[dim_index] = (new_dim, on)
-        keys = (changed_keys if changed_keys is not None
-                else new_dim.select(on))
-        bks = _postings_buckets(self.table, on, keys)
-        if not bks:
-            return {"skipped": False, "refreshed": 0}
-        main_cols = self._main_cols()
-        affected = (
             self.table.read_raw(buckets=bks)
             .where(~F.coalesce(F.col("_deleted"), F.lit(False)))
             .join(F.broadcast(keys.distinct()), on=on, how="leftsemi")
-            .select(*main_cols, "_source_lsn")
+            .select(*self._main_cols(), "_source_lsn")
         )
-        floor_lsn = F.coalesce(
-            F.nullif(F.col("_source_lsn"), F.lit("")), F.lit(ZERO_LSN))
-        refreshed = affected
         for d, d_on in self.dims:
             refreshed = refreshed.join(F.broadcast(d), on=d_on, how="left")
+        floor_lsn = F.coalesce(
+            F.nullif(F.col("_source_lsn"), F.lit("")), F.lit(ZERO_LSN))
         refreshed = refreshed.select(
             *self.table.logical_columns(),
             F.concat(floor_lsn, F.lit("~d")).alias("lsn")
         ).withColumn("op", F.lit("U"))
         res = self.table.merge_apply(refreshed, batch_id=batch_id)
-        # payload-only rewrite (see JoinedView.apply_dim_changes): EVERY
-        # dim's posting map survives this commit — touch them all
+        # a dim refresh rewrites dim PAYLOAD on existing rows — keys (so
+        # buckets) and the join columns are untouched, so no (value,
+        # bucket) pair can appear or move: advance EVERY dim's map as_of
+        # past this data commit without touching the pairs (else the next
+        # lookup would needlessly re-bootstrap the whole map after every
+        # dim refresh)
         for _d, d_on in self.dims:
             _touch_on_postings(self.table, d_on)
         return res
+
+
+class MultiJoinedView(JoinedView):
+    """:class:`JoinedView` over ``dims``: ordered ``[(dim_df, on_col), …]``
+    (VERDICT r03 missing #2 — a view derived from several dims needed hand
+    composition). Dim payload columns must be disjoint from each other and
+    from the main columns (the ES mapping's flat document)."""
+
+    def __init__(self, view_table: LakeTable, dims: list):
+        self.table = view_table
+        self.dims = [(d, on) for d, on in dims]
+        payload = [c for d, on in self.dims for c in d.columns if c != on]
+        dupes = {c for c in payload if payload.count(c) > 1}
+        if dupes:
+            raise ValueError(f"dim payload columns must be disjoint: {dupes}")
+
+    def apply_dim_changes(self, dim_index: int, new_dim: DataFrame,
+                          changed_keys: DataFrame | None = None,
+                          batch_id: str | None = None) -> dict:
+        """Dim ``dim_index`` changed: re-enrich the view rows joining its
+        changed keys through ALL dims (see ``JoinedView._refresh_dim``)."""
+        return self._refresh_dim(dim_index, new_dim, changed_keys, batch_id)
 
 
 # Posting maps live in a SIDE PARQUET TABLE (`{table}/postings/{on}/data/`,
@@ -310,7 +300,11 @@ def _postings_meta(t: LakeTable, on: str) -> dict | None:
         return json.load(fh)
 
 
-def _write_postings_meta(t: LakeTable, on: str, meta: dict) -> None:
+def _write_postings_meta(t: LakeTable, on: str) -> None:
+    """Record the map as folded up to ``t``'s current bucket spec and
+    ``pairs_version``."""
+    meta = {"nb": t.snap.get("n_buckets"),
+            "as_of": int(t.snap.get("pairs_version", 0))}
     d = _postings_dir(t, on)
     os.makedirs(d, exist_ok=True)
     p = os.path.join(d, "meta.json")
@@ -366,8 +360,7 @@ def _ensure_on_postings(t: LakeTable, on: str) -> None:
     data = os.path.join(d, "data")
     _postings_pairs(t, on, t.read_raw(), live_only=True) \
         .write.mode("overwrite").parquet(data)
-    _write_postings_meta(t, on, {"nb": t.snap.get("n_buckets"),
-                                 "as_of": int(t.snap.get("pairs_version", 0))})
+    _write_postings_meta(t, on)
 
 
 def _extend_on_postings(t: LakeTable, on: str, ups: DataFrame) -> None:
@@ -384,8 +377,7 @@ def _extend_on_postings(t: LakeTable, on: str, ups: DataFrame) -> None:
     data = os.path.join(d, "data")
     _postings_pairs(t, on, ups, live_only=False) \
         .coalesce(1).write.mode("append").parquet(data)
-    _write_postings_meta(t, on, {"nb": t.snap.get("n_buckets"),
-                                 "as_of": int(t.snap.get("pairs_version", 0))})
+    _write_postings_meta(t, on)
     n_files = sum(1 for f in os.listdir(data) if f.endswith(".parquet"))
     if n_files > _POSTINGS_COMPACT_FILES:
         _compact_postings(t, on)
@@ -400,8 +392,7 @@ def _touch_on_postings(t: LakeTable, on: str) -> None:
     t.refresh()
     if not _postings_valid(t, on, for_extension=True):
         return
-    _write_postings_meta(t, on, {"nb": t.snap.get("n_buckets"),
-                                 "as_of": int(t.snap.get("pairs_version", 0))})
+    _write_postings_meta(t, on)
 
 
 def _compact_postings(t: LakeTable, on: str) -> None:
@@ -451,7 +442,7 @@ def _postings_as_dict(t: LakeTable, on: str) -> dict | None:
     return out
 
 
-class TransformView:
+class TransformView(View):
     """A derived table maintained from CDC net changes by a per-row column
     transform — the curation-index analog of :class:`JoinedView`.
 
@@ -484,27 +475,12 @@ class TransformView:
 
     def apply(self, net_changes: DataFrame, batch_id: str | None = None,
               max_lsn: str | None = None) -> dict:
-        key = self.table.key_col
-        present = set(net_changes.columns)
-        missing = [F.lit(None).cast(t).alias(c)
-                   for c, t in self.input_types.items() if c not in present]
-        cols = self.table.logical_columns()
-        view_types = self.table.schema()
-
-        ups = self.transform(
-            net_changes.where(F.col("op") == "U").select("*", *missing)
-        ).select(*cols, "op", "lsn")
-        dels = net_changes.where(F.col("op") == "D").select(
-            F.col(key),
-            *[F.lit(None).cast(view_types[c].dataType).alias(c)
-              for c in cols if c != key],
-            "op", "lsn",
-        )
-        return self.table.merge_apply(ups.unionByName(dels.select(*cols, "op", "lsn")),
-                                      batch_id=batch_id, max_lsn=max_lsn)
+        ups = self.transform(_with_inputs(
+            net_changes.where(F.col("op") == "U"), self.input_types))
+        return _merge_derived(self.table, net_changes, ups, batch_id, max_lsn)
 
 
-class FilteredView:
+class FilteredView(View):
     """Predicate-subscribed subset view — the adapters' row-level
     ``etlCondition`` under CDC.
 
@@ -540,25 +516,15 @@ class FilteredView:
     def apply(self, net_changes: DataFrame, batch_id: str | None = None,
               max_lsn: str | None = None) -> dict:
         cols = self.table.logical_columns()
-        view_types = self.table.schema()
-        present = set(net_changes.columns)
-        missing = [F.lit(None).cast(t).alias(c)
-                   for c, t in self.input_types.items() if c not in present]
-        present |= {c for c, _ in self.input_types.items()}
-        sel = [F.col(c) if c in present
-               else F.lit(None).cast(view_types[c].dataType).alias(c)
-               for c in cols]
+        view_types = {f.name: f.dataType for f in self.table.schema().fields}
         pred = F.coalesce(F.expr(self.predicate), F.lit(False))
         # predicate evaluates against the FULL net row (pre-projection),
         # so conditions on non-view columns work like the reference's
-        ups = net_changes.where(F.col("op") == "U").select("*", *missing)
-        reclassified = ups.select(
-            *sel, F.when(pred, F.lit("U")).otherwise(F.lit("D")).alias("op"),
+        ups = _with_inputs(net_changes.where(F.col("op") == "U"),
+                           {**view_types, **self.input_types}).select(
+            *cols, F.when(pred, F.lit("U")).otherwise(F.lit("D")).alias("op"),
             "lsn")
-        dels = net_changes.where(F.col("op") == "D").select(
-            "*", *missing).select(*sel, "op", "lsn")
-        return self.table.merge_apply(reclassified.unionByName(dels),
-                                      batch_id=batch_id, max_lsn=max_lsn)
+        return _merge_derived(self.table, net_changes, ups, batch_id, max_lsn)
 
 
 def fingerprint_index_view(view_table: LakeTable) -> TransformView:
@@ -623,7 +589,7 @@ def pack_index_frame(df: DataFrame, seq_len: int, shard_chars: int = 4,
         id_col, *PACK_INDEX_COLS)
 
 
-class PackIndexView:
+class PackIndexView(View):
     """An incrementally-maintained sequence-packing index over the CDC'd
     token corpus — training-sequence assignments that stay current as docs
     arrive, change and disappear.
@@ -654,7 +620,7 @@ class PackIndexView:
       force their shard's re-pack.
 
     Exactly-once rides the view table's ledger + per-key LSN fence;
-    TRUNCATE propagates via the pipeline's ``v.table.truncate()`` hook like
+    TRUNCATE propagates via the default ``View.on_source_truncate`` like
     every view. The index scan is narrow (6 int/string columns) and the
     touched-shard IN-filter pushes to parquet — at 10^10 docs the index is
     ~3 orders smaller than the corpus it indexes.
@@ -694,16 +660,7 @@ class PackIndexView:
             self._ntok(net_changes).alias("n_tok"), "op", "lsn")
         touched = [r[0] for r in batch.select("shard").distinct().collect()]
         if not touched:
-            return self.table.merge_apply(
-                batch.select(key, *PACK_INDEX_COLS[:1],
-                             F.lit(None).cast("long").alias("n_tok"),
-                             F.lit(None).cast("long").alias("local_off"),
-                             F.lit(None).cast("long").alias("pack_first"),
-                             F.lit(None).cast("long").alias("pack_last"),
-                             "op", "lsn"),
-                batch_id=batch_id, max_lsn=max_lsn)
-
-        from canal_spark.lsn import ZERO_LSN
+            return _ledger_only(self.table, batch_id, shards=0)
 
         # The re-pack population must be the POST-merge winners, not
         # (current ∪ batch): a re-delivered batch row loses its per-key LSN
@@ -804,7 +761,7 @@ class PackIndexView:
                                       batch_id=batch_id, max_lsn=max_lsn)
 
 
-class MinhashBandIndexView:
+class MinhashBandIndexView(View):
     """An incrementally-maintained MinHash-LSH band index over the CDC'd
     token corpus — near-dup detection without corpus rescans.
 
@@ -945,7 +902,52 @@ def rollup_deltas(old: DataFrame, chg: DataFrame, key: str,
                            + [f"_ds_{c} != 0" for c in sums])))
 
 
-class ChildAggView:
+def _source_deltas(src: LakeTable, net: DataFrame, gcol: str,
+                   grp: Callable, sums: tuple, max_lsn: str | None):
+    """The retraction front of the rollup-style views: the signed
+    per-group deltas (``rollup_deltas``) of one net batch of the source
+    table ``src`` against the old images the source's merge fenced it
+    against, plus the batch's high LSN. ``grp`` maps a group-column value
+    to its group. Returns ``(None, None)`` for a batch holding no row past
+    the source's truncate fence."""
+    src.refresh()
+    key = src.key_col
+    parent = src.snap.get("parent", src.snap["version"])
+    psnap = src.load_version(parent)
+    trunc = psnap.get("truncate_lsn", "")
+    have = set(net.columns)
+    chg = net.where(F.col(key).isNotNull())
+    if trunc:
+        chg = chg.where(F.col("lsn") > trunc)
+    chg = chg.select(
+        F.col(key), "op", "lsn",
+        grp(F.col(gcol) if gcol in have else F.lit(None)).alias("_n_g"),
+        *[(F.col(c) if c in have else F.lit(None)).cast("long")
+          .alias(f"_n_{c}") for c in sums])
+    # one metadata action: the batch's source buckets + max LSN (the merge
+    # planner's bucket-stats idiom). Routed via the PARENT snapshot's
+    # _bucket_col, not plain bucket_expr: mid spec-migration a migrated
+    # key's old image lives under its NEW-spec bucket, and the plain
+    # expression would read the wrong buckets and silently skip the
+    # retraction (code-review r03 finding #1)
+    brows = (chg.groupBy(src._bucket_col(key, psnap).alias("_b"))
+             .agg(F.max("lsn").alias("mx")).collect())
+    if not brows:
+        return None, None
+    bks = sorted(r["_b"] for r in brows)
+    hi = max_lsn or max(r["mx"] for r in brows)
+    old = (
+        src.read_raw(buckets=bks, version=parent)
+        .select(F.col(key),
+                grp(F.col(gcol)).alias("_o_g"),
+                *[F.col(c).cast("long").alias(f"_o_{c}") for c in sums],
+                F.col("_source_lsn").alias("_o_lsn"),
+                F.coalesce(F.col("_deleted"), F.lit(False)).alias("_o_del"))
+    )
+    return rollup_deltas(old, chg, key, sums), hi
+
+
+class ChildAggView(View):
     """The reference ES adapter's ONE-TO-MANY sub-table shape: a view row
     per PARENT, enriched with aggregates over its CHILD rows, maintained
     from the CHILD table's CDC stream (client-adapter/escore/.../
@@ -1007,68 +1009,31 @@ class ChildAggView:
             .select(child.key_col, self.fk_col)
         _extend_on_postings(child, self.fk_col, ups)
 
+    def _payload(self) -> list[str]:
+        """The parent payload columns: all but the key and aggregates."""
+        aggs = {self.table.key_col, "n_child",
+                *[f"sum_{c}" for c in self.sum_cols]}
+        return [c for c in self.table.logical_columns() if c not in aggs]
+
     def apply(self, net_changes: DataFrame, batch_id: str | None = None,
               max_lsn: str | None = None) -> dict:
-        from canal_spark.lsn import ZERO_LSN
-        from canal_spark.table.lake import _ledger_add
-
-        if batch_id is not None and self.table.is_applied(batch_id):
-            self._extend_fk_postings(net_changes)
-            return {"skipped": True}
+        # ALSO on ledger-skipped redelivery (crash repair)
         self._extend_fk_postings(net_changes)
-        child = self.child.refresh()
-        ckey = child.key_col
-        fk, sums = self.fk_col, self.sum_cols
-        vkey = self.table.key_col
-        parent = child.snap.get("parent", child.snap["version"])
-        psnap = child.load_version(parent)
-        trunc = psnap.get("truncate_lsn", "")
-
-        have = set(net_changes.columns)
-        chg = net_changes.where(F.col(ckey).isNotNull())
-        if trunc:
-            chg = chg.where(F.col("lsn") > trunc)
-        chg = chg.select(
-            F.col(ckey), "op", "lsn",
-            (F.col(fk).cast("string") if fk in have
-             else F.lit(None).cast("string")).alias("_n_g"),
-            *[(F.col(c) if c in have else F.lit(None)).cast("long")
-              .alias(f"_n_{c}") for c in sums])
-        # ONE metadata action: the batch's child-table buckets (routed via
-        # the PARENT snapshot's spec — same mid-migration rule as
-        # AggRollupView) + the range's max LSN
-        brows = (chg.groupBy(child._bucket_col(ckey, psnap).alias("_b"))
-                 .agg(F.max("lsn").alias("mx")).collect())
-        if not brows:
-            if batch_id is not None:
-                self.table._commit_meta(applied_batches=_ledger_add(
-                    self.table.snap["applied_batches"], batch_id))
-            return {"skipped": False, "parents": 0}
-        bks = sorted(r["_b"] for r in brows)
-        hi = max_lsn or max(r["mx"] for r in brows)
-
-        old = (
-            child.read_raw(buckets=bks, version=parent)
-            .select(F.col(ckey),
-                    F.col(fk).cast("string").alias("_o_g"),
-                    *[F.col(c).cast("long").alias(f"_o_{c}") for c in sums],
-                    F.col("_source_lsn").alias("_o_lsn"),
-                    F.coalesce(F.col("_deleted"), F.lit(False)).alias("_o_del"))
-        )
-        deltas = (rollup_deltas(old, chg, ckey, sums)
-                  .where(F.col("_g").isNotNull()).persist())
+        if batch_id is not None and self.table.is_applied(batch_id):
+            return {"skipped": True}
+        sums, vkey = self.sum_cols, self.table.key_col
+        deltas, hi = _source_deltas(self.child, net_changes, self.fk_col,
+                                    lambda c: c.cast("string"), sums, max_lsn)
+        if deltas is None:
+            return _ledger_only(self.table, batch_id, parents=0)
+        deltas = deltas.where(F.col("_g").isNotNull()).persist()
         try:
             vrows = (deltas.select(
                 self.table._bucket_col("_g").alias("_b"))
                 .distinct().collect())
             if not vrows:
-                if batch_id is not None:
-                    self.table._commit_meta(applied_batches=_ledger_add(
-                        self.table.snap["applied_batches"], batch_id))
-                return {"skipped": False, "parents": 0}
-            payload = [c for c in self.table.logical_columns()
-                       if c != vkey and c != "n_child"
-                       and c not in {f"sum_{c2}" for c2 in sums}]
+                return _ledger_only(self.table, batch_id, parents=0)
+            payload = self._payload()
             cur = (
                 self.table.read_raw(buckets=[r["_b"] for r in vrows])
                 .where(~F.coalesce(F.col("_deleted"), F.lit(False)))
@@ -1110,9 +1075,7 @@ class ChildAggView:
         are already filtered by the child's own truncate fence in apply().
         """
         vkey, sums = self.table.key_col, self.sum_cols
-        payload = [c for c in self.table.logical_columns()
-                   if c != vkey and c != "n_child"
-                   and c not in {f"sum_{c2}" for c2 in sums}]
+        payload = self._payload()
         live = (self.table.refresh().read_raw()
                 .where(~F.coalesce(F.col("_deleted"), F.lit(False))))
         zeroed = live.select(
@@ -1156,12 +1119,8 @@ class ChildAggView:
         (``stored || '~g'``, the apply_dim_changes idiom): it always beats
         the row it read and loses to any later child batch (whose stamp is
         ``greatest(hi, stored) || '~c'`` and therefore sorts above)."""
-        from canal_spark.lsn import ZERO_LSN
-
         vkey, sums = self.table.key_col, self.sum_cols
-        payload = [c for c in self.table.logical_columns()
-                   if c != vkey and c != "n_child"
-                   and c not in {f"sum_{c2}" for c2 in sums}]
+        payload = self._payload()
         aggs = ["n_child"] + [f"sum_{c}" for c in sums]
         ups = net_changes.where(F.col("op") == "U") \
             .select(vkey, *payload, "op", "lsn")
@@ -1231,7 +1190,7 @@ class ChildAggView:
                                       batch_id=batch_id)
 
 
-class AggRollupView:
+class AggRollupView(View):
     """An incrementally-maintained GROUP-BY rollup over the CDC'd table —
     classic retraction-based incremental view maintenance (count/sum are
     the self-maintainable aggregates; min/max would need recompute on
@@ -1267,7 +1226,7 @@ class AggRollupView:
     tombstones its row. View-row stamps are ``greatest(range_hi || '~a',
     stored_lsn || '~a')`` — monotone per group even if a group's latest
     change arrives in a range whose LSNs trail an earlier range's.
-    TRUNCATE propagates via the pipeline's ``v.table.truncate()`` hook.
+    TRUNCATE propagates via the default ``View.on_source_truncate``.
     """
 
     def __init__(self, view_table: LakeTable, main: LakeTable,
@@ -1279,64 +1238,22 @@ class AggRollupView:
 
     def apply(self, net_changes: DataFrame, batch_id: str | None = None,
               max_lsn: str | None = None) -> dict:
-        from canal_spark.lsn import ZERO_LSN
-        from canal_spark.table.lake import _ledger_add
-
         if batch_id is not None and self.table.is_applied(batch_id):
             return {"skipped": True}
-        main = self.main.refresh()
-        key = main.key_col
         gcol, sums = self.group_col, self.sum_cols
-        parent = main.snap.get("parent", main.snap["version"])
-        psnap = main.load_version(parent)
-        trunc = psnap.get("truncate_lsn", "")
-
-        def _grp(c):
-            return F.coalesce(c.cast("string"), F.lit(NULL_GROUP))
-
-        have = set(net_changes.columns)
-        chg = net_changes.where(F.col(key).isNotNull())
-        if trunc:
-            chg = chg.where(F.col("lsn") > trunc)
-        chg = chg.select(
-            F.col(key), "op", "lsn",
-            _grp(F.col(gcol) if gcol in have else F.lit(None)).alias("_n_g"),
-            *[(F.col(c) if c in have else F.lit(None)).cast("long")
-              .alias(f"_n_{c}") for c in sums])
-        # one metadata action: the batch's main-table buckets + max LSN
-        # (the merge planner's bucket-stats idiom). Routed via the PARENT
-        # snapshot's _bucket_col, not plain bucket_expr: mid spec-migration
-        # a migrated key's old image lives under its NEW-spec bucket, and
-        # the plain expression would read the wrong buckets and silently
-        # skip the retraction (code-review r03 finding #1)
-        brows = (chg.groupBy(main._bucket_col(key, psnap).alias("_b"))
-                 .agg(F.max("lsn").alias("mx")).collect())
-        if not brows:
-            if batch_id is not None:
-                self.table._commit_meta(applied_batches=_ledger_add(
-                    self.table.snap["applied_batches"], batch_id))
-            return {"skipped": False, "groups": 0}
-        bks = sorted(r["_b"] for r in brows)
-        hi = max_lsn or max(r["mx"] for r in brows)
-
-        old = (
-            main.read_raw(buckets=bks, version=parent)
-            .select(F.col(key),
-                    _grp(F.col(gcol)).alias("_o_g"),
-                    *[F.col(c).cast("long").alias(f"_o_{c}") for c in sums],
-                    F.col("_source_lsn").alias("_o_lsn"),
-                    F.coalesce(F.col("_deleted"), F.lit(False)).alias("_o_del"))
-        )
-        deltas = rollup_deltas(old, chg, key, sums).persist()
+        deltas, hi = _source_deltas(
+            self.main, net_changes, gcol,
+            lambda c: F.coalesce(c.cast("string"), F.lit(NULL_GROUP)),
+            sums, max_lsn)
+        if deltas is None:
+            return _ledger_only(self.table, batch_id, groups=0)
+        deltas = deltas.persist()
         try:
             vrows = (deltas.select(
                 self.table._bucket_col("_g").alias("_b"))
                 .distinct().collect())
             if not vrows:
-                if batch_id is not None:
-                    self.table._commit_meta(applied_batches=_ledger_add(
-                        self.table.snap["applied_batches"], batch_id))
-                return {"skipped": False, "groups": 0}
+                return _ledger_only(self.table, batch_id, groups=0)
             cur = (
                 self.table.read_raw(buckets=[r["_b"] for r in vrows])
                 .select(F.col(gcol).alias("_g"), "n_docs",

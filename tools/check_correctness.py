@@ -7,6 +7,9 @@ column order by name). Usage:
 
     python tools/check_correctness.py [sf_dir] [query ...]
 
+An argument that is neither an existing directory (first position only)
+nor a registered query name exits 2 before anything runs.
+
 Driver-faithfulness (VERDICT r04 next #1b — the old gate could NOT
 reproduce the driver's red rows):
 
@@ -65,6 +68,15 @@ def main() -> int:
     import __spark_entry__ as ent
     from canal_spark.session import get_spark
 
+    # a typo'd sf_dir or query name must not become a filter that matches
+    # nothing and reports a green gate: refuse it before any work starts
+    qs = ent.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"not a directory or a registered query: {unknown}",
+              file=sys.stderr)
+        return 2
+
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
@@ -74,7 +86,6 @@ def main() -> int:
     # driver order: the oracle SQL strings (and any expected-state parquet
     # they materialize) are produced before a single query has run
     oracles = ent.oracle_sql()
-    qs = ent.queries()
     spark = get_spark("check_correctness")
     failures = []
     for name, fn in qs.items():
