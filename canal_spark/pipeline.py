@@ -292,10 +292,7 @@ def apply_events(events: DataFrame, table: LakeTable,
     stats.ranges += 1
     stats.events = sum(m.get("upserts", 0) + m.get("deletes", 0)
                        for m in stats.merges)
-    if batch_id is not None:
-        table._commit_meta(
-            applied_batches=table.snap["applied_batches"][-255:] + [batch_id]
-        )
+    table.mark_applied(batch_id)
     return stats
 
 

@@ -26,9 +26,6 @@ table's normal bucket-pruned apply.
 
 from __future__ import annotations
 
-import json
-import os
-
 from canal_spark.operators.lww import collapse_lww
 from canal_spark.table.lake import LakeTable
 
@@ -83,35 +80,14 @@ def _record_ack(dst: LakeTable, prefix: str, head: int) -> None:
 # persists one cursor per destination+client — SEPARATE from the data).
 # The lake analog: a named consumer registry beside the feed —
 # ``{src.path}/consumers/{name}.json`` holding the consumer's last acked
-# feed version — so N independent consumers share one feed and the feed's
-# retention is governed by the SLOWEST ack, not any single relay. The
+# feed version (``LakeTable.set_consumer_ack``/``consumer_acks``) — so N
+# independent consumers share one feed and the feed's retention is
+# governed by the SLOWEST ack, not any single relay. The
 # registry deliberately lives OUTSIDE the snapshot chain: an ack is a
 # cursor, not table state, and recording it as a snapshot commit would
 # bump ``src.version`` on every poll — each consumer's ack would look like
 # "new upstream work" to every OTHER consumer and idle relays would wake
 # each other forever.
-
-
-def _consumers_dir(src: LakeTable) -> str:
-    return os.path.join(src.path, "consumers")
-
-
-def consumer_acks(src: LakeTable) -> dict[str, int]:
-    """The source-side consumer registry: name → last acked feed version
-    (reads ``{src}/consumers/*.json`` — shared with LakeTable.consumer_acks,
-    which expire_changelog and maintain() use as the retention floor)."""
-    return src.consumer_acks()
-
-
-def _write_consumer_ack(src: LakeTable, name: str, ack: int) -> None:
-    """Atomic (write + rename) cursor update, monotonic."""
-    d = _consumers_dir(src)
-    os.makedirs(d, exist_ok=True)
-    p = os.path.join(d, f"{name}.json")
-    tmp = p + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"ack": int(ack)}, fh)
-    os.replace(tmp, p)
 
 
 def register_consumer(src: LakeTable, name: str, ack: int | None = None) -> int:
@@ -129,7 +105,7 @@ def register_consumer(src: LakeTable, name: str, ack: int | None = None) -> int:
     if ack is None:
         retained = [int(v) for v in src.snap.get("changelog", {})]
         ack = min(retained) - 1 if retained else src.version
-    _write_consumer_ack(src, name, int(ack))
+    src.set_consumer_ack(name, int(ack))
     return int(ack)
 
 
@@ -137,9 +113,8 @@ def _record_consumer_ack(src: LakeTable, name: str, head: int) -> None:
     """Advance a named consumer's source-side ack (monotonic). Written
     AFTER the destination's data commit, so a crash in between leaves the
     src ack behind — the re-pull is a ledger no-op."""
-    cur = consumer_acks(src).get(name, 0)
-    if cur < head:
-        _write_consumer_ack(src, name, head)
+    if src.consumer_acks().get(name, 0) < head:
+        src.set_consumer_ack(name, head)
 
 
 def feed_status(src: LakeTable) -> dict:
@@ -149,7 +124,7 @@ def feed_status(src: LakeTable) -> dict:
     src.refresh()
     retained = sorted(int(v) for v in src.snap.get("changelog", {}))
     head = src.version
-    acks = consumer_acks(src)
+    acks = src.consumer_acks()
     return {
         "head": head,
         "retained_versions": retained,
@@ -229,12 +204,12 @@ def relay_step(src: LakeTable, dst: LakeTable,
     dst.refresh()
     ack = acked_version(dst, prefix)
     if consumer is not None:
-        if consumer not in consumer_acks(src):
+        if consumer not in src.consumer_acks():
             register_consumer(src, consumer)
         # the src-side ack is written only after the dst data commit, so it
         # never leads the dst ledger; max() just skips an already-consumed
         # range faster after dst-ledger eviction
-        ack = max(ack, consumer_acks(src).get(consumer, 0))
+        ack = max(ack, src.consumer_acks().get(consumer, 0))
     head = src.version
 
     # TRUNCATE is a metadata commit — invisible to the row feed by design;

@@ -45,6 +45,9 @@ from pyspark.sql import types as T
 
 SYS_COLS = ["_source_lsn", "_deleted"]
 LEDGER_KEEP = 256
+# snapshot fields of an in-progress incremental spec migration
+# (rebucket_start); every commit that completes the migration drops them
+_MIGRATION = ("next_n_buckets", "migrated")
 
 
 def bucket_expr(key_col: str, n_buckets: int):
@@ -176,6 +179,37 @@ class LakeTable:
         os.replace(cur_tmp, os.path.join(self.meta_dir, "_current"))
         self.snap = snap
 
+    def _commit_meta(self, drop=(), **updates) -> None:
+        """The one snapshot commit: the current snapshot plus ``updates``,
+        minus the ``drop`` fields, as version + 1 with this one as parent."""
+        snap = {k: v for k, v in self.snap.items() if k not in drop}
+        snap.update(updates, version=self.version + 1, parent=self.version)
+        self._write_snapshot(snap)
+
+    def _ledger(self, batch_id: str | None) -> dict:
+        """The ledger field with ``batch_id`` appended, capped at the last
+        LEDGER_KEEP ids (no field for None)."""
+        if batch_id is None:
+            return {}
+        return {"applied_batches":
+                (self.snap["applied_batches"] + [batch_id])[-LEDGER_KEEP:]}
+
+    def mark_applied(self, batch_id: str | None) -> None:
+        """Ledger ``batch_id`` without a data commit (a batch that changes
+        no row), so a redelivery skips; a no-op for None."""
+        if batch_id is not None:
+            self._commit_meta(**self._ledger(batch_id))
+
+    def _data_commit(self, batch_id: str | None) -> dict:
+        """Bookkeeping every data commit carries: the ledger entry and the
+        posting-table freshness chain (views.py) — this commit may land
+        join values in new buckets, so a posting map not yet folded up to
+        ``prev_pairs_version`` must rebuild, one folded to it extends
+        incrementally."""
+        return {**self._ledger(batch_id),
+                "prev_pairs_version": int(self.snap.get("pairs_version", 0)),
+                "pairs_version": self.version + 1}
+
     def _load_current(self) -> dict:
         with open(os.path.join(self.meta_dir, "_current")) as f:
             name = f.read().strip()
@@ -288,23 +322,13 @@ class LakeTable:
         if not hot:
             return cold_df
         # Merge-on-read fold, restricted to buckets that actually carry
-        # deltas: base ∪ delta rows of those buckets, one winner per key by
-        # max _source_lsn (LSNs are unique per event, so ties only occur
-        # between byte-identical duplicate deliveries). Buckets without
-        # deltas stream through untouched — zero read tax once compaction
-        # has folded a bucket.
+        # deltas: base ∪ delta rows of those buckets, one winner per key
+        # (_fold). Buckets without deltas stream through untouched — zero
+        # read tax once compaction has folded a bucket.
         hot_names = [f for b in hot for f in snap["files"].get(str(b), [])] \
             + [f for b in hot for f in deltas.get(str(b), [])]
-        hot_df = self._read_files(snap, hot_names)
-        key = snap["key_col"]
-        others = [c for c in hot_df.columns if c != key]
-        folded = (
-            hot_df.groupBy(key)
-            .agg(F.max_by(F.struct(*others), F.col("_source_lsn")).alias("_w"))
-            .select(key, *[F.col(f"_w.{c}").alias(c) for c in others])
-            .select(*hot_df.columns)
-        )
-        return cold_df.unionByName(folded)
+        return cold_df.unionByName(
+            _fold(self._read_files(snap, hot_names), snap["key_col"]))
 
     def _read_files(self, snap: dict, names: list[str]) -> DataFrame:
         phys = self._physical_schema(snap)
@@ -385,14 +409,8 @@ class LakeTable:
             self._read_files(snap, self._lookup_files(keys, snap))
             .where(F.col(key).isin(list(keys)))
         )
-        others = [c for c in hit.columns if c != key]
-        folded = (
-            hit.groupBy(key)
-            .agg(F.max_by(F.struct(*others), F.col("_source_lsn")).alias("_w"))
-            .select(key, *[F.col(f"_w.{c}").alias(c) for c in others])
-        )
         return (
-            folded.where(~F.coalesce(F.col("_deleted"), F.lit(False)))
+            _fold(hit, key).where(~F.coalesce(F.col("_deleted"), F.lit(False)))
             .select(*[c["name"] for c in snap["columns"]])
         )
 
@@ -457,40 +475,55 @@ class LakeTable:
         shutil.rmtree(staging, ignore_errors=True)
         return out, stats
 
-    def _to_physical(self, df: DataFrame) -> DataFrame:
+    def _to_physical(self, df: DataFrame, *extra) -> DataFrame:
+        """Logical rows → physical names + system columns (defaults for a
+        frame without them) + ``extra`` columns, e.g. the bucket ``_b``."""
         sel = [F.col(c["name"]).alias(c["physical"]) for c in self.snap["columns"]]
         for c in SYS_COLS:
             sel.append(
                 F.col(c) if c in df.columns
                 else (F.lit(False) if c == "_deleted" else F.lit("")).alias(c)
             )
-        return df.select(*sel)
+        return df.select(*sel, *extra)
+
+    def _rewrite(self, rows: DataFrame, bucket, replace: list[int] | None,
+                 n_buckets: int | None = None) -> dict:
+        """The one bucket rewrite: write logical ``rows`` bucketed by the
+        ``bucket`` column expression, and swap the new files in for every
+        base and delta file of the ``replace`` buckets (None: every
+        bucket). Returns the snapshot fields ``files``, ``deltas`` and
+        ``file_stats`` for the caller's commit."""
+        new_files, new_stats = self._write_data(
+            self._to_physical(rows, bucket.alias("_b")), self.version + 1,
+            n_buckets=n_buckets)
+        if replace is None:
+            return {"files": new_files, "deltas": {}, "file_stats": new_stats}
+        files = dict(self.snap["files"])
+        deltas = dict(self.snap.get("deltas", {}))
+        fstats = dict(self.snap.get("file_stats", {}))
+        for b in replace:
+            for f in files.pop(str(b), []) + deltas.pop(str(b), []):
+                fstats.pop(f, None)
+        for b, fl in new_files.items():
+            # a migration step moves old bucket b's keys only into
+            # {b, b+N, ...}: the sole new id < N is b itself, just popped
+            files[b] = files.get(b, []) + fl
+        fstats.update(new_stats)
+        return {"files": files, "deltas": deltas, "file_stats": fstats}
 
     def overwrite(self, df: DataFrame, batch_id: str | None = None) -> None:
         """Full replace (initial load / backfill). df has logical columns.
         An in-progress spec migration completes for free: everything is
         being rewritten anyway, so land it all under the target spec."""
-        key_phys = self._phys(self.key_col)
-        tgt_n = self.snap.get("next_n_buckets") or self.n_buckets
-        pdf = self._to_physical(df).withColumn(
-            "_b", bucket_expr(key_phys, tgt_n)
-        )
-        version = self.snap["version"] + 1
-        files, stats = self._write_data(pdf, version, n_buckets=tgt_n)
-        snap = dict(self.snap)
-        snap.update(version=version, files=files, file_stats=stats,
-                    deltas={}, parent=self.snap["version"], n_buckets=tgt_n)
-        snap.pop("next_n_buckets", None)
-        snap.pop("migrated", None)
+        tgt_n = self.next_n_buckets or self.n_buckets
+        swap = self._rewrite(df, bucket_expr(self.key_col, tgt_n), None,
+                             n_buckets=tgt_n)
+        self._commit_meta(drop=_MIGRATION, n_buckets=tgt_n, **swap,
+                          **self._data_commit(batch_id))
         # pairs chain restarts: the whole population changed, so any stored
         # posting map is a lie either way — delete it outright (ADVICE r04
         # #2: a re-seeded table serving a pre-seed map under-lists buckets,
         # silently skipping live rows on dim refresh)
-        snap["prev_pairs_version"] = int(snap.get("pairs_version", 0))
-        snap["pairs_version"] = version
-        if batch_id is not None:
-            snap["applied_batches"] = _ledger_add(snap["applied_batches"], batch_id)
-        self._write_snapshot(snap)
         shutil.rmtree(os.path.join(self.path, "postings"), ignore_errors=True)
 
     def _phys(self, logical: str) -> str:
@@ -578,10 +611,7 @@ class LakeTable:
                 .collect())
             touched = sorted({r["_b"] for r in bstats})
             if not touched:  # empty batch: no data, no version churn
-                if batch_id is not None:
-                    self._commit_meta(
-                        applied_batches=_ledger_add(
-                            self.snap["applied_batches"], batch_id))
+                self.mark_applied(batch_id)
                 return {"skipped": False, "version": self.snap["version"],
                         "buckets": 0, "upserts": 0, "deletes": 0}
             n_up = sum(r["count"] for r in bstats if r["_c_op"] == "U")
@@ -659,14 +689,10 @@ class LakeTable:
                 .otherwise(F.coalesce(F.col("_deleted"), F.lit(False)))
                 .alias("_deleted"),
             ).where(F.col(key).isNotNull())
-            # back to physical names for the files
-            sel = [F.col(c["name"]).alias(c["physical"]) for c in self.snap["columns"]]
-            out_p = out.select(*sel, "_source_lsn", "_deleted").withColumn(
-                "_b", self._bucket_col(self._phys(key))
-            )
-
-            version = self.snap["version"] + 1
-            new_files, new_stats = self._write_data(out_p, version)
+            version = self.version + 1
+            new_files, new_stats = self._write_data(
+                self._to_physical(out, self._bucket_col(key).alias("_b")),
+                version)
             files = dict(self.snap["files"])
             file_stats = dict(fstats)
             replaced = set(touched_files)
@@ -676,7 +702,7 @@ class LakeTable:
             for f in replaced:
                 file_stats.pop(f, None)
             file_stats.update(new_stats)
-            self._commit_merge(version, chg, bstats, batch_id, max_lsn,
+            self._commit_merge(chg, bstats, batch_id, max_lsn,
                                files=files, file_stats=file_stats)
             return {"skipped": False, "version": version, "mode": "cow",
                     "buckets": len(touched), "upserts": n_up, "deletes": n_del,
@@ -715,47 +741,37 @@ class LakeTable:
             is_del.alias("_deleted"),
             F.col("_b"),
         )
-        version = self.snap["version"] + 1
+        version = self.version + 1
         new_files, new_stats = self._write_data(out_p, version, prefix="d")
         deltas = {b: list(fl) for b, fl in self.snap.get("deltas", {}).items()}
         for b, fl in new_files.items():
             deltas[b] = deltas.get(b, []) + fl
         file_stats = dict(self.snap.get("file_stats", {}))
         file_stats.update(new_stats)
-        self._commit_merge(version, chg, bstats, batch_id, max_lsn,
+        self._commit_merge(chg, bstats, batch_id, max_lsn,
                            deltas=deltas, file_stats=file_stats)
         return {"skipped": False, "version": version, "mode": "mor",
                 "buckets": len(touched), "upserts": n_up, "deletes": n_del,
                 "files_read": 0, "files_carried": bucket_files,
                 "delta_files": sum(len(fl) for fl in new_files.values())}
 
-    def _commit_merge(self, version: int, chg: DataFrame, bstats: list,
+    def _commit_merge(self, chg: DataFrame, bstats: list,
                       batch_id: str | None, max_lsn: str | None,
                       **updates) -> None:
-        """The snapshot commit both merge modes end in: ``updates`` (the
-        mode's new file lists) plus the bookkeeping every data commit
-        carries — parent link, posting-map freshness chain, ledger,
-        watermark and, when enabled, the change feed."""
-        snap = dict(self.snap)
-        snap.update(updates, version=version, parent=self.snap["version"])
-        # posting-table freshness chain (views.py): this data commit may
-        # land join values in new buckets — a posting map not yet folded up
-        # to prev_pairs_version must rebuild, one folded to it extends
-        # incrementally
-        snap["prev_pairs_version"] = int(snap.get("pairs_version", 0))
-        snap["pairs_version"] = version
-        if batch_id is not None:
-            snap["applied_batches"] = _ledger_add(
-                snap["applied_batches"], batch_id)
+        """The commit both merge modes end in: ``updates`` (the mode's new
+        file lists) plus the watermark and, when enabled, the change feed
+        entry, on top of the data-commit bookkeeping."""
         obs_lsn = max((r["mx"] for r in bstats if r["mx"]), default=None)
         wm = max(filter(None, [max_lsn, obs_lsn]), default=None)
         if wm:
-            snap["watermark_lsn"] = max(snap.get("watermark_lsn", ""), wm)
+            updates["watermark_lsn"] = max(
+                self.snap.get("watermark_lsn", ""), wm)
         if self.snap.get("changelog_enabled"):
-            snap["changelog"] = dict(self.snap.get("changelog", {}))
-            snap["changelog"][str(version)] = self._write_changelog(
-                chg, version)
-        self._write_snapshot(snap)
+            version = self.version + 1
+            updates["changelog"] = {
+                **self.snap.get("changelog", {}),
+                str(version): self._write_changelog(chg, version)}
+        self._commit_meta(**updates, **self._data_commit(batch_id))
 
     # -------------------------------------------------------- change feed
     def _write_changelog(self, chg: DataFrame, version: int) -> str:
@@ -820,7 +836,7 @@ class LakeTable:
 
     def consumer_acks(self) -> dict[str, int]:
         """Named consumer cursors on this table's feed: ``consumers/*.json``
-        beside the data (written by streaming/relay.py — OUTSIDE the
+        beside the data (written by ``set_consumer_ack`` — OUTSIDE the
         snapshot chain so an ack never looks like new upstream work to
         other consumers). The reference's per-destination meta
         (meta/.../FileMixedMetaManager.java)."""
@@ -833,6 +849,17 @@ class LakeTable:
                 with open(os.path.join(d, f)) as fh:
                     out[f[:-5]] = int(json.load(fh)["ack"])
         return out
+
+    def set_consumer_ack(self, name: str, ack: int) -> None:
+        """Position the named consumer's cursor at feed version ``ack``
+        (atomic write + rename, outside the snapshot chain)."""
+        d = os.path.join(self.path, "consumers")
+        os.makedirs(d, exist_ok=True)
+        p = os.path.join(d, f"{name}.json")
+        tmp = p + ".tmp"
+        with open(tmp, "w") as fh:
+            json.dump({"ack": int(ack)}, fh)
+        os.replace(tmp, p)
 
     def expire_changelog(self, upto_version: int, force: bool = False) -> int:
         """Purge feed entries with version ≤ ``upto_version`` — call once
@@ -869,13 +896,6 @@ class LakeTable:
         return len(drop)
 
     # ----------------------------------------------------------------- DDL
-    def _commit_meta(self, **updates) -> None:
-        snap = dict(self.snap)
-        snap["version"] = self.snap["version"] + 1
-        snap["parent"] = self.snap["version"]
-        snap.update(updates)
-        self._write_snapshot(snap)
-
     def alter_add_column(self, name: str, dtype: T.DataType,
                          position: tuple[str, str | None] | None = None) -> None:
         if name in self.logical_columns():
@@ -951,23 +971,9 @@ class LakeTable:
         live = (
             self.read_raw(buckets=buckets)  # delta-folded: one winner/key
             .where(~F.coalesce(F.col("_deleted"), F.lit(False)))
-            .withColumn("_b", self._bucket_col(self.key_col))
         )
-        sel = [F.col(c["name"]).alias(c["physical"]) for c in self.snap["columns"]]
-        out = live.select(*sel, "_source_lsn", "_deleted", "_b")
-        version = self.snap["version"] + 1
-        new_files, new_stats = self._write_data(out, version)
-        files = dict(self.snap["files"])
-        deltas = dict(self.snap.get("deltas", {}))
-        file_stats = dict(self.snap.get("file_stats", {}))
-        for b in buckets:
-            for f in files.get(str(b), []) + deltas.get(str(b), []):
-                file_stats.pop(f, None)
-            files[str(b)] = new_files.get(str(b), [])
-            deltas.pop(str(b), None)
-        file_stats.update(new_stats)
-        self._commit_meta(files=files, deltas=deltas, file_stats=file_stats,
-                          version=version)
+        self._commit_meta(
+            **self._rewrite(live, self._bucket_col(self.key_col), buckets))
 
     def rebucket(self, new_n_buckets: int) -> dict:
         """Online bucket-count evolution: rewrite the table under
@@ -1002,29 +1008,18 @@ class LakeTable:
         """
         if new_n_buckets == self.n_buckets and not self.snap.get("next_n_buckets"):
             return {"skipped": True, "n_buckets": self.n_buckets}
-        raw = self.read_raw()  # delta-folded: one winner per key, tombstones kept
-        sel = [F.col(c["name"]).alias(c["physical"]) for c in self.snap["columns"]]
-        out = raw.select(
-            *sel, "_source_lsn", "_deleted",
-            bucket_expr(self.key_col, new_n_buckets).alias("_b"))
-        version = self.snap["version"] + 1
-        new_files, new_stats = self._write_data(out, version,
-                                                n_buckets=new_n_buckets)
-        snap = dict(self.snap)
-        snap.update(
-            version=version, parent=self.snap["version"],
-            n_buckets=new_n_buckets, files=new_files, file_stats=new_stats,
-            deltas={},
-            columns=[{k: v for k, v in c.items() if k != "prev"}
-                     for c in self.snap["columns"]],
-        )
+        swap = self._rewrite(
+            self.read_raw(),  # delta-folded: one winner per key, tombstones kept
+            bucket_expr(self.key_col, new_n_buckets), None,
+            n_buckets=new_n_buckets)
         # the full rewrite subsumes any in-progress incremental migration
-        snap.pop("next_n_buckets", None)
-        snap.pop("migrated", None)
-        self._write_snapshot(snap)
+        self._commit_meta(
+            drop=_MIGRATION, n_buckets=new_n_buckets,
+            columns=[{k: v for k, v in c.items() if k != "prev"}
+                     for c in self.snap["columns"]], **swap)
         return {"skipped": False, "n_buckets": new_n_buckets,
-                "files": sum(len(fl) for fl in new_files.values()),
-                "version": version}
+                "files": sum(len(fl) for fl in swap["files"].values()),
+                "version": self.version}
 
     def rebucket_start(self, new_n_buckets: int) -> None:
         """Begin an INCREMENTAL spec migration to ``new_n_buckets`` — a
@@ -1060,54 +1055,24 @@ class LakeTable:
         old bucket moves, the snapshot flips ``n_buckets`` to M and the
         migration fields disappear. Commit cost is bounded by the step's
         buckets — never the table."""
-        m = self.snap.get("next_n_buckets")
+        m = self.next_n_buckets
         if not m:
             return {"done": True, "migrated": [], "remaining": 0}
         n = self.n_buckets
         mig = {int(b) for b in self.snap.get("migrated", [])}
         todo = [b for b in range(n) if b not in mig][:max_buckets]
-        if not todo:
-            # everything already moved: flip the spec (normally done by the
-            # final data step; this closes a crash-between-commits window)
-            snap = dict(self.snap)
-            snap["version"] = self.snap["version"] + 1
-            snap["parent"] = self.snap["version"]
-            snap["n_buckets"] = m
-            snap.pop("next_n_buckets", None)
-            snap.pop("migrated", None)
-            self._write_snapshot(snap)
-            remaining = 0
+        # no todo = everything already moved: the commit only flips the
+        # spec (normally done by the final data step; this closes a
+        # crash-between-commits window)
+        swap = self._rewrite(
+            self.read_raw(buckets=todo),  # folded winners, tombstones kept
+            bucket_expr(self.key_col, m), todo, n_buckets=m) if todo else {}
+        mig |= set(todo)
+        remaining = n - len(mig)
+        if remaining:
+            self._commit_meta(migrated=sorted(mig), **swap)
         else:
-            raw = self.read_raw(buckets=todo)  # folded winners, tombstones kept
-            sel = [F.col(c["name"]).alias(c["physical"])
-                   for c in self.snap["columns"]]
-            out = raw.select(*sel, "_source_lsn", "_deleted",
-                             bucket_expr(self.key_col, m).alias("_b"))
-            version = self.snap["version"] + 1
-            new_files, new_stats = self._write_data(out, version, n_buckets=m)
-            files = dict(self.snap["files"])
-            deltas = dict(self.snap.get("deltas", {}))
-            fstats = dict(self.snap.get("file_stats", {}))
-            for b in todo:
-                for f in files.pop(str(b), []) + deltas.pop(str(b), []):
-                    fstats.pop(f, None)
-            for b, fl in new_files.items():
-                # old bucket b's keys land only in {b, b+N, ...}: the sole
-                # new id < N is b itself, just popped — no collision with
-                # other unmigrated old buckets
-                files[str(b)] = files.get(str(b), []) + fl
-            fstats.update(new_stats)
-            mig |= set(todo)
-            snap = dict(self.snap)
-            snap.update(version=version, parent=self.snap["version"],
-                        files=files, deltas=deltas, file_stats=fstats,
-                        migrated=sorted(mig))
-            remaining = n - len(mig)
-            if remaining == 0:
-                snap["n_buckets"] = m
-                snap.pop("next_n_buckets", None)
-                snap.pop("migrated", None)
-            self._write_snapshot(snap)
+            self._commit_meta(drop=_MIGRATION, n_buckets=m, **swap)
         return {"done": remaining == 0, "migrated": todo,
                 "remaining": remaining}
 
@@ -1259,9 +1224,17 @@ class LakeTable:
         return removed
 
 
-def _ledger_add(ledger: list[str], batch_id: str) -> list[str]:
-    out = list(ledger) + [batch_id]
-    return out[-LEDGER_KEEP:]
+def _fold(df: DataFrame, key: str) -> DataFrame:
+    """Merge-on-read fold: one winner per key by max ``_source_lsn`` (LSNs
+    are unique per event, so ties only occur between byte-identical
+    duplicate deliveries), columns in ``df``'s order."""
+    others = [c for c in df.columns if c != key]
+    return (
+        df.groupBy(key)
+        .agg(F.max_by(F.struct(*others), F.col("_source_lsn")).alias("_w"))
+        .select(key, *[F.col(f"_w.{c}").alias(c) for c in others])
+        .select(*df.columns)
+    )
 
 
 def _type_from_json(j: str) -> T.DataType:

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from canal_spark.lsn import ZERO_LSN
-from canal_spark.table.lake import LakeTable, _ledger_add
+from canal_spark.table.lake import LakeTable
 
 
 class View:
@@ -95,9 +95,7 @@ def _merge_derived(table: LakeTable, net: DataFrame, ups: DataFrame,
 def _ledger_only(table: LakeTable, batch_id: str | None, **out) -> dict:
     """A batch that changes no view row: land its ledger entry (so a
     redelivery skips) without a data commit."""
-    if batch_id is not None:
-        table._commit_meta(applied_batches=_ledger_add(
-            table.snap["applied_batches"], batch_id))
+    table.mark_applied(batch_id)
     return {"skipped": False, **out}
 
 

@@ -3,8 +3,6 @@ import shutil
 
 import pytest
 
-os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORK = os.path.join(REPO, ".work", "tests")
 
@@ -13,8 +11,9 @@ WORK = os.path.join(REPO, ".work", "tests")
 def spark():
     from canal_spark.session import get_spark
 
-    s = get_spark(app_name="canal_spark_tests", master="local[8]",
-                  shuffle_partitions=8)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8)
+    s = get_spark(app_name="canal_spark_tests", master=f"local[{cpus}]",
+                  shuffle_partitions=cpus)
     yield s
 
 

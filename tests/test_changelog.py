@@ -243,9 +243,7 @@ def test_relay_ack_survives_ledger_eviction(spark, tmp_work):
     lake.LEDGER_KEEP = 8
     try:
         for i in range(10):
-            consumer.refresh()._commit_meta(
-                applied_batches=lake._ledger_add(
-                    consumer.snap["applied_batches"], f"other-{i}"))
+            consumer.refresh().mark_applied(f"other-{i}")
         consumer2 = LakeTable(spark, consumer.path)
         assert not any(b.startswith("relay/")
                        for b in consumer2.snap["applied_batches"])
@@ -316,8 +314,8 @@ def test_consumer_groups_two_cadences(spark, tmp_work):
     and ``expire_acked`` frees feed files only past the SLOWEST registered
     ack — the fast consumer's expiry polls must never drop what the slow
     one still needs."""
-    from canal_spark.streaming.relay import (consumer_acks, register_consumer,
-                                             relay_step, relay_until_idle)
+    from canal_spark.streaming.relay import (register_consumer, relay_step,
+                                             relay_until_idle)
 
     spec = CdcLogSpec(n_events=2400, seed=97, events_per_file=300,
                       pk_change_frac=0.04)
@@ -340,7 +338,7 @@ def test_consumer_groups_two_cadences(spark, tmp_work):
         # slow hasn't moved: nothing may be expired past its ack (0)
         assert len(primary.refresh().snap["changelog"]) > 0
         assert min(int(v) for v in primary.snap["changelog"]) \
-            > consumer_acks(primary)["slow"]
+            > primary.consumer_acks()["slow"]
 
     # slow catches up in one drain; its expiry now frees the whole feed
     polls = relay_until_idle(primary.refresh(), slow, prefix="slow",
@@ -359,7 +357,7 @@ def test_consumer_groups_two_cadences(spark, tmp_work):
     r2 = relay_step(primary.refresh(), slow, prefix="slow", consumer="slow")
     assert not r1["applied"] and not r2["applied"]
     assert primary.refresh().version == v
-    acks = consumer_acks(primary)
+    acks = primary.consumer_acks()
     assert acks["slow"] == acks["fast"] == v
 
 
@@ -367,9 +365,7 @@ def test_consumer_group_resume_after_crash(spark, tmp_work):
     """A named consumer rebuilt from disk (fresh handles) resumes from its
     cursor; a crash BETWEEN the downstream data commit and the source-side
     ack write replays into a ledger no-op and then repairs the cursor."""
-    from canal_spark.streaming.relay import (_record_consumer_ack,
-                                             _write_consumer_ack,
-                                             consumer_acks, relay_step)
+    from canal_spark.streaming.relay import _record_consumer_ack, relay_step
 
     spec = CdcLogSpec(n_events=1600, seed=98, events_per_file=400)
     base, log_dir, primary, consumer = _setup(spark, tmp_work, spec)
@@ -377,17 +373,17 @@ def test_consumer_group_resume_after_crash(spark, tmp_work):
     replay(spark, log_dir, primary, files=segs[:2], batch_id="w1")
     r1 = relay_step(primary.refresh(), consumer, consumer="c1")
     assert r1["applied"]
-    assert consumer_acks(primary)["c1"] == r1["ack"]
+    assert primary.consumer_acks()["c1"] == r1["ack"]
 
     # simulate the crash window: roll the src-side cursor BACK (the dst
     # data commit + ledger entry survived) and re-poll — ledger no-op,
     # cursor repaired forward
-    _write_consumer_ack(primary, "c1", 0)
+    primary.set_consumer_ack("c1", 0)
     primary2, consumer2 = LakeTable(spark, primary.path), \
         LakeTable(spark, consumer.path)
     r2 = relay_step(primary2, consumer2, consumer="c1")
     assert not r2["applied"]                       # redelivery absorbed
-    assert consumer_acks(primary2)["c1"] == r1["ack"]
+    assert primary2.consumer_acks()["c1"] == r1["ack"]
 
     replay(spark, log_dir, primary2.refresh(), files=segs[2:], batch_id="w2")
     r3 = relay_step(primary2.refresh(), consumer2, consumer="c1")
@@ -395,7 +391,7 @@ def test_consumer_group_resume_after_crash(spark, tmp_work):
     assert _state(consumer2) == _state(primary2)
     # _record_consumer_ack is monotonic: a stale write never regresses
     _record_consumer_ack(primary2, "c1", 1)
-    assert consumer_acks(primary2)["c1"] == r3["ack"]
+    assert primary2.consumer_acks()["c1"] == r3["ack"]
 
 
 def test_consumer_subscribe_joins_live_feed(spark, tmp_work):
@@ -403,8 +399,8 @@ def test_consumer_subscribe_joins_live_feed(spark, tmp_work):
     registration at the snapshot version; earlier feed files it never saw
     can already be gone (expired by older consumers), later churn arrives
     incrementally — final state exact."""
-    from canal_spark.streaming.relay import (consumer_acks, relay_step,
-                                             relay_until_idle, subscribe)
+    from canal_spark.streaming.relay import (relay_step, relay_until_idle,
+                                             subscribe)
 
     spec = CdcLogSpec(n_events=2000, seed=99, events_per_file=400,
                       pk_change_frac=0.03)
@@ -432,7 +428,7 @@ def test_consumer_subscribe_joins_live_feed(spark, tmp_work):
                      expire_acked=True)
     assert _state(newcomer) == _state(primary)
     assert _state(veteran) == _state(primary)
-    acks = consumer_acks(primary)
+    acks = primary.consumer_acks()
     assert set(acks) == {"veteran", "newcomer"}
     assert primary.refresh().snap["changelog"] == {}
 
@@ -482,8 +478,7 @@ def test_expire_guard_protects_lagging_consumer(spark, tmp_work):
     # force=True overrides the clamp (abandoning a dead consumer)
     replay(spark, log_dir, primary.refresh())  # un-ledgered: re-log rows
     assert primary.refresh().snap["changelog"]
-    import canal_spark.streaming.relay as relay_mod
-    relay_mod._write_consumer_ack(primary, "dead", 0)
+    primary.set_consumer_ack("dead", 0)
     assert primary.expire_changelog(primary.version) == 0   # clamped
     assert primary.expire_changelog(primary.version, force=True) > 0
     assert primary.refresh().snap["changelog"] == {}

@@ -708,45 +708,48 @@ def test_fuzz_consumer_groups(spark, seed, n_events, n_base, events_per_file,
 
     work = os.path.join(WORK, f"fuzz_cgrp_{next(_RUN)}")
     shutil.rmtree(work, ignore_errors=True)
-    base = generate_base_table(n_base, seed=seed)
-    log_dir = os.path.join(work, "log")
-    generate_cdc_log(log_dir, CdcLogSpec(
-        n_events=n_events, seed=seed, events_per_file=events_per_file,
-        pk_change_frac=pk_change_frac), base)
-    bdf = spark.createDataFrame(base.to_pandas(), TOKSEQ_SCHEMA)
-    primary = LakeTable.create(spark, os.path.join(work, "p"), TOKSEQ_SCHEMA,
-                               n_buckets=4, df=bdf, changelog=True)
-    ca = LakeTable.create(spark, os.path.join(work, "ca"), TOKSEQ_SCHEMA,
-                          n_buckets=4, df=bdf)
-    cb = LakeTable.create(spark, os.path.join(work, "cb"), TOKSEQ_SCHEMA,
-                          n_buckets=4, df=bdf)
-    register_consumer(primary, "a")
-    register_consumer(primary, "b")
+    try:
+        base = generate_base_table(n_base, seed=seed)
+        log_dir = os.path.join(work, "log")
+        generate_cdc_log(log_dir, CdcLogSpec(
+            n_events=n_events, seed=seed, events_per_file=events_per_file,
+            pk_change_frac=pk_change_frac), base)
+        bdf = spark.createDataFrame(base.to_pandas(), TOKSEQ_SCHEMA)
+        primary = LakeTable.create(spark, os.path.join(work, "p"), TOKSEQ_SCHEMA,
+                                   n_buckets=4, df=bdf, changelog=True)
+        ca = LakeTable.create(spark, os.path.join(work, "ca"), TOKSEQ_SCHEMA,
+                              n_buckets=4, df=bdf)
+        cb = LakeTable.create(spark, os.path.join(work, "cb"), TOKSEQ_SCHEMA,
+                              n_buckets=4, df=bdf)
+        register_consumer(primary, "a")
+        register_consumer(primary, "b")
 
-    segs = sorted(f for f in os.listdir(log_dir) if f.endswith(".parquet"))
-    per = max(1, len(segs) // n_windows)
-    windows = [segs[i:i + per] for i in range(0, len(segs), per)]
-    for i, win in enumerate(windows):
-        replay(spark, log_dir, primary.refresh(), files=win,
-               batch_id=f"w{i}")
-        if (i + 1) % cadence_a == 0:
-            relay_until_idle(primary.refresh(), ca, prefix="a", consumer="a",
-                             expire_acked=expire)
-        if (i + 1) % cadence_b == 0:
-            relay_until_idle(primary.refresh(), cb, prefix="b", consumer="b",
-                             expire_acked=expire)
-    # final drains
-    relay_until_idle(primary.refresh(), ca, prefix="a", consumer="a",
-                     expire_acked=expire)
-    relay_until_idle(primary.refresh(), cb, prefix="b", consumer="b",
-                     expire_acked=expire)
+        segs = sorted(f for f in os.listdir(log_dir) if f.endswith(".parquet"))
+        per = max(1, len(segs) // n_windows)
+        windows = [segs[i:i + per] for i in range(0, len(segs), per)]
+        for i, win in enumerate(windows):
+            replay(spark, log_dir, primary.refresh(), files=win,
+                   batch_id=f"w{i}")
+            if (i + 1) % cadence_a == 0:
+                relay_until_idle(primary.refresh(), ca, prefix="a", consumer="a",
+                                 expire_acked=expire)
+            if (i + 1) % cadence_b == 0:
+                relay_until_idle(primary.refresh(), cb, prefix="b", consumer="b",
+                                 expire_acked=expire)
+        # final drains
+        relay_until_idle(primary.refresh(), ca, prefix="a", consumer="a",
+                         expire_acked=expire)
+        relay_until_idle(primary.refresh(), cb, prefix="b", consumer="b",
+                         expire_acked=expire)
 
-    expected, cols = oracle_final_state(base, log_dir)
-    for t in (primary, ca, cb):
-        assert_state_equal(
-            rows_to_state(t.refresh().read().collect(), cols), expected, cols)
-    if expire:
-        assert primary.refresh().snap["changelog"] == {}
+        expected, cols = oracle_final_state(base, log_dir)
+        for t in (primary, ca, cb):
+            assert_state_equal(
+                rows_to_state(t.refresh().read().collect(), cols), expected, cols)
+        if expire:
+            assert primary.refresh().snap["changelog"] == {}
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 @settings(max_examples=4, deadline=None,
@@ -775,44 +778,47 @@ def test_fuzz_child_agg_view(spark, seed, n_events, n_base, events_per_file,
     mix = (op_ins / tot, op_upd / tot, op_del / tot)
     work = os.path.join(WORK, f"fuzz_cagg_{next(_RUN)}")
     shutil.rmtree(work, ignore_errors=True)
-    base = generate_base_table(n_base, seed=seed)
-    log_dir = os.path.join(work, "log")
-    generate_cdc_log(log_dir, CdcLogSpec(
-        n_events=n_events, seed=seed, events_per_file=events_per_file,
-        pk_change_frac=pk_change_frac, op_mix=mix), base)
-    bdf = spark.createDataFrame(base.to_pandas(), TOKSEQ_SCHEMA)
-    table = LakeTable.create(spark, os.path.join(work, "t"), TOKSEQ_SCHEMA,
-                             n_buckets=4, df=bdf)
-    parents = [("web", 1), ("books", 2), ("code", 3), ("wiki", 4),
-               ("forums", 5)][:n_parents]
-    pdf = spark.createDataFrame(parents, "source string, w int")
-    vschema = T.StructType([
-        T.StructField("source", T.StringType()),
-        T.StructField("w", T.IntegerType()),
-        T.StructField("n_child", T.LongType()),
-        T.StructField("sum_n_tok", T.LongType()),
-    ])
-    vt = LakeTable.create(spark, os.path.join(work, "v"), vschema,
-                          key_col="source", n_buckets=2)
-    view = ChildAggView(vt, table, "source", ("n_tok",))
-    vt.overwrite(view.seed_frame(pdf, bdf), batch_id="seed")
-    replay(spark, log_dir, table, batch_id="b0", views=[view])
-    if redeliver:
-        replay(spark, log_dir, table.refresh(), views=[view])  # no ledger
+    try:
+        base = generate_base_table(n_base, seed=seed)
+        log_dir = os.path.join(work, "log")
+        generate_cdc_log(log_dir, CdcLogSpec(
+            n_events=n_events, seed=seed, events_per_file=events_per_file,
+            pk_change_frac=pk_change_frac, op_mix=mix), base)
+        bdf = spark.createDataFrame(base.to_pandas(), TOKSEQ_SCHEMA)
+        table = LakeTable.create(spark, os.path.join(work, "t"), TOKSEQ_SCHEMA,
+                                 n_buckets=4, df=bdf)
+        parents = [("web", 1), ("books", 2), ("code", 3), ("wiki", 4),
+                   ("forums", 5)][:n_parents]
+        pdf = spark.createDataFrame(parents, "source string, w int")
+        vschema = T.StructType([
+            T.StructField("source", T.StringType()),
+            T.StructField("w", T.IntegerType()),
+            T.StructField("n_child", T.LongType()),
+            T.StructField("sum_n_tok", T.LongType()),
+        ])
+        vt = LakeTable.create(spark, os.path.join(work, "v"), vschema,
+                              key_col="source", n_buckets=2)
+        view = ChildAggView(vt, table, "source", ("n_tok",))
+        vt.overwrite(view.seed_frame(pdf, bdf), batch_id="seed")
+        replay(spark, log_dir, table, batch_id="b0", views=[view])
+        if redeliver:
+            replay(spark, log_dir, table.refresh(), views=[view])  # no ledger
 
-    expected, _cols = oracle_final_state(base, log_dir)
-    agg = {}
-    for row in expected.values():
-        g = row.get("source")
-        if g is None:
-            continue
-        a = agg.setdefault(g, [0, 0])
-        a[0] += 1
-        a[1] += row.get("n_tok") or 0
-    want = {p[0]: (p[1], *agg.get(p[0], [0, 0])) for p in parents}
-    got = {r["source"]: (r["w"], r["n_child"], r["sum_n_tok"])
-           for r in vt.refresh().read().collect()}
-    assert got == want
+        expected, _cols = oracle_final_state(base, log_dir)
+        agg = {}
+        for row in expected.values():
+            g = row.get("source")
+            if g is None:
+                continue
+            a = agg.setdefault(g, [0, 0])
+            a[0] += 1
+            a[1] += row.get("n_tok") or 0
+        want = {p[0]: (p[1], *agg.get(p[0], [0, 0])) for p in parents}
+        got = {r["source"]: (r["w"], r["n_child"], r["sum_n_tok"])
+               for r in vt.refresh().read().collect()}
+        assert got == want
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 @settings(max_examples=4, deadline=None,
@@ -836,49 +842,52 @@ def test_fuzz_multi_joined_view(spark, seed, n_events, n_base,
 
     work = os.path.join(WORK, f"fuzz_mj_{next(_RUN)}")
     shutil.rmtree(work, ignore_errors=True)
-    base = generate_base_table(n_base, seed=seed)
-    log_dir = os.path.join(work, "log")
-    generate_cdc_log(log_dir, CdcLogSpec(
-        n_events=n_events, seed=seed, events_per_file=events_per_file,
-        pk_change_frac=pk_change_frac,
-        ddl_script=[(min(ddl[0], n_events), ddl[1])] if ddl else []), base)
-    bdf = spark.createDataFrame(base.to_pandas(), TOKSEQ_SCHEMA)
-    table = LakeTable.create(spark, os.path.join(work, "t"), TOKSEQ_SCHEMA,
-                             n_buckets=4, df=bdf)
-    dim1 = spark.createDataFrame(
-        [("web", "crawl"), ("books", "curated"), ("code", "curated")],
-        "source string, kind string")
-    dim2 = spark.createDataFrame(
-        [(i, "even" if i % 2 == 0 else "odd") for i in range(256)],
-        "n_tok int, band string")
-    vschema = T.StructType([
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("n_tok", T.IntegerType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("band", T.StringType()),
-    ])
-    from pyspark.sql import functions as F
-    seeded = (bdf.select("doc_id", "n_tok", "source")
-              .join(F.broadcast(dim1), "source", "left")
-              .join(F.broadcast(dim2), "n_tok", "left"))
-    vt = LakeTable.create(spark, os.path.join(work, "v"), vschema,
-                          n_buckets=4,
-                          df=seeded.select(*[f.name for f in vschema]))
-    view = MultiJoinedView(vt, [(dim1, "source"), (dim2, "n_tok")])
-    replay(spark, log_dir, table, batch_id="b0", views=[view])
-    if redeliver:
-        replay(spark, log_dir, table.refresh(), views=[view])  # no ledger
+    try:
+        base = generate_base_table(n_base, seed=seed)
+        log_dir = os.path.join(work, "log")
+        generate_cdc_log(log_dir, CdcLogSpec(
+            n_events=n_events, seed=seed, events_per_file=events_per_file,
+            pk_change_frac=pk_change_frac,
+            ddl_script=[(min(ddl[0], n_events), ddl[1])] if ddl else []), base)
+        bdf = spark.createDataFrame(base.to_pandas(), TOKSEQ_SCHEMA)
+        table = LakeTable.create(spark, os.path.join(work, "t"), TOKSEQ_SCHEMA,
+                                 n_buckets=4, df=bdf)
+        dim1 = spark.createDataFrame(
+            [("web", "crawl"), ("books", "curated"), ("code", "curated")],
+            "source string, kind string")
+        dim2 = spark.createDataFrame(
+            [(i, "even" if i % 2 == 0 else "odd") for i in range(256)],
+            "n_tok int, band string")
+        vschema = T.StructType([
+            T.StructField("doc_id", T.StringType()),
+            T.StructField("n_tok", T.IntegerType()),
+            T.StructField("source", T.StringType()),
+            T.StructField("kind", T.StringType()),
+            T.StructField("band", T.StringType()),
+        ])
+        from pyspark.sql import functions as F
+        seeded = (bdf.select("doc_id", "n_tok", "source")
+                  .join(F.broadcast(dim1), "source", "left")
+                  .join(F.broadcast(dim2), "n_tok", "left"))
+        vt = LakeTable.create(spark, os.path.join(work, "v"), vschema,
+                              n_buckets=4,
+                              df=seeded.select(*[f.name for f in vschema]))
+        view = MultiJoinedView(vt, [(dim1, "source"), (dim2, "n_tok")])
+        replay(spark, log_dir, table, batch_id="b0", views=[view])
+        if redeliver:
+            replay(spark, log_dir, table.refresh(), views=[view])  # no ledger
 
-    expected, _cols = oracle_final_state(base, log_dir)
-    d1 = {"web": "crawl", "books": "curated", "code": "curated"}
-    want = {}
-    for doc_id, row in expected.items():
-        nt = row.get("n_tok")
-        want[doc_id] = (
-            nt, row.get("source"), d1.get(row.get("source")),
-            None if nt is None or not (0 <= nt < 256)
-            else ("even" if nt % 2 == 0 else "odd"))
-    got = {r["doc_id"]: (r["n_tok"], r["source"], r["kind"], r["band"])
-           for r in vt.refresh().read().collect()}
-    assert got == want
+        expected, _cols = oracle_final_state(base, log_dir)
+        d1 = {"web": "crawl", "books": "curated", "code": "curated"}
+        want = {}
+        for doc_id, row in expected.items():
+            nt = row.get("n_tok")
+            want[doc_id] = (
+                nt, row.get("source"), d1.get(row.get("source")),
+                None if nt is None or not (0 <= nt < 256)
+                else ("even" if nt % 2 == 0 else "odd"))
+        got = {r["doc_id"]: (r["n_tok"], r["source"], r["kind"], r["band"])
+               for r in vt.refresh().read().collect()}
+        assert got == want
+    finally:
+        shutil.rmtree(work, ignore_errors=True)

@@ -305,3 +305,88 @@ def test_merge_apply_leaves_no_cached_blocks(spark, tmp_work):
         t.merge_apply(ch, batch_id=f"cow-{i}")
         m.merge_apply(ch, batch_id=f"mor-{i}")
     assert jsc.getPersistentRDDs().size() == before
+
+
+def test_every_commit_kind_extends_lineage(spark, tmp_work):
+    """Every kind of commit — data, ledger-only, DDL, maintenance, spec
+    migration, feed expiry — is one snapshot whose parent is the version
+    before it, and every version of the chain stays loadable."""
+    t = LakeTable.create(spark, os.path.join(tmp_work, "t"), SCHEMA,
+                         n_buckets=4, changelog=True)
+    assert t.version == 0 and t.snap["parent"] is None
+
+    def commit(fn, *args, **kw):
+        prev = t.version
+        fn(*args, **kw)
+        assert t.version == prev + 1 and t.snap["parent"] == prev
+        assert LakeTable(spark, t.path).snap == t.snap
+
+    def rows():
+        return {r["doc_id"]: tuple(r) for r in t.read().collect()}
+
+    commit(t.overwrite, spark.createDataFrame(BASE, SCHEMA))
+    commit(t.merge_apply, _chg(spark, [
+        ("a", [9, 9], 2, "code", "U", "lsn-002"),
+        ("b", None, None, None, "D", "lsn-003"),
+        ("d", [7], 1, "wiki", "U", "lsn-004")]), batch_id="cow")
+    commit(t.merge_apply, _chg(spark, [
+        ("c", [1], 1, "web", "U", "lsn-005"),
+        ("e", [2, 3], 2, "books", "U", "lsn-006")]), batch_id="mor",
+        mode="mor")
+    assert t.snap["deltas"]
+    commit(t.merge_apply, _chg(spark, []), batch_id="empty")
+    commit(t.mark_applied, "marked")
+    assert t.snap["applied_batches"] == ["cow", "mor", "empty", "marked"]
+    commit(t.alter_add_column, "lang", T.StringType())
+    commit(t.alter_rename_column, "source", "origin")
+    commit(t.alter_modify_column, "n_tok", T.LongType())
+    commit(t.alter_drop_column, "lang")
+    want = rows()
+    assert set(want) == {"a", "c", "d", "e"}
+    commit(t.compact)
+    assert not t.snap["deltas"] and rows() == want
+    commit(t.rebucket, 8)
+    assert rows() == want
+    commit(t.rebucket_start, 16)
+    done = False
+    while not done:
+        prev = t.version
+        done = t.rebucket_step(3)["done"]
+        assert t.version == prev + 1 and t.snap["parent"] == prev
+    assert t.n_buckets == 16 and t.next_n_buckets is None
+    assert "migrated" not in t.snap and rows() == want
+    commit(t.expire_changelog, t.version)
+    assert t.snap["changelog"] == {}
+    commit(t.truncate, lsn="lsn-100")
+    assert rows() == {}
+
+    for v in range(1, t.version + 1):
+        snap = t.load_version(v)
+        assert snap["version"] == v and snap["parent"] == v - 1
+
+
+def test_ledger_window_holds_across_replays(spark, tmp_work, monkeypatch):
+    """The exactly-once ledger keeps at most LEDGER_KEEP batch ids on every
+    path that writes it — a replay's per-range merges and its own batch id
+    alike — and the newest id always survives."""
+    import canal_spark.table.lake as lake
+    from canal_spark.fixtures import (CdcLogSpec, generate_base_table,
+                                      generate_cdc_log)
+    from canal_spark.pipeline import replay
+
+    monkeypatch.setattr(lake, "LEDGER_KEEP", 4)
+    base = generate_base_table(60, seed=31)
+    log_dir = os.path.join(tmp_work, "log")
+    generate_cdc_log(log_dir, CdcLogSpec(n_events=400, seed=31,
+                                         events_per_file=60,
+                                         txn_max=20), base)
+    t = LakeTable.create(spark, os.path.join(tmp_work, "t"), SCHEMA,
+                         n_buckets=4,
+                         df=spark.createDataFrame(base.to_pandas(), SCHEMA))
+    segs = sorted(f for f in os.listdir(log_dir) if f.endswith(".parquet"))
+    assert len(segs) >= 4
+    for i, seg in enumerate(segs[:4]):
+        replay(spark, log_dir, t.refresh(), files=[seg], batch_id=f"s{i}")
+        ledger = t.refresh().snap["applied_batches"]
+        assert len(ledger) <= 4, ledger
+        assert ledger[-1] == f"s{i}"
