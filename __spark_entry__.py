@@ -699,8 +699,12 @@ def _agg_rollup_artifacts(sf_dir: str) -> tuple[str, str]:
     (size+mtime — auto-invalidates across testdata regeneration) and
     generation is deterministic (pyarrow tokenize + seeded log generator),
     so whichever side runs first materializes them and the other reuses.
+    Each builder writes a private sibling directory and renames it into
+    place, so no process ever sees, or deletes, another's half-built set;
+    the loser of a concurrent build drops only its own copy.
     """
     import hashlib
+    import uuid
 
     import pyarrow.parquet as pq
 
@@ -716,13 +720,24 @@ def _agg_rollup_artifacts(sf_dir: str) -> tuple[str, str]:
     log_dir = os.path.join(work, "binlog")
     done = os.path.join(work, "_DONE")
     if not os.path.exists(done):
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(work, exist_ok=True)
-        pq.write_table(_tokenized_base(sf_dir).sort_by("doc_id"), base_path)
-        generate_cdc_log(log_dir, _replay_spec(n_events=1500, seed=19),
-                         base=pq.read_table(base_path).sort_by("doc_id"))
-        with open(done, "w") as fh:
-            fh.write("ok")
+        tmp = f"{work}.tmp-{uuid.uuid4().hex[:12]}"
+        os.makedirs(tmp)
+        try:
+            tmp_base = os.path.join(tmp, "base.parquet")
+            pq.write_table(_tokenized_base(sf_dir).sort_by("doc_id"), tmp_base)
+            generate_cdc_log(os.path.join(tmp, "binlog"),
+                             _replay_spec(n_events=1500, seed=19),
+                             base=pq.read_table(tmp_base).sort_by("doc_id"))
+            with open(os.path.join(tmp, "_DONE"), "w") as fh:
+                fh.write("ok")
+            try:
+                os.rename(tmp, work)
+            except OSError:
+                # another builder's complete set is already in place
+                if not os.path.exists(done):
+                    raise
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
     return base_path, log_dir
 
 

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from canal_spark.pipeline import merge_with_views
 from canal_spark.table.lake import LakeTable
 
 
@@ -50,15 +51,9 @@ def _delete_keys(table: LakeTable, victims, views=(),
             F.lit("D").alias("op"),
             F.concat(floor_lsn, F.lit("~s")).alias("lsn"),
         )
-    ).persist()  # one victim scan feeds the main merge AND every view
-    try:
-        res = table.merge_apply(net, batch_id=batch_id)
-        for i, v in enumerate(views):
-            v.apply(net, batch_id=None if batch_id is None
-                    else f"{batch_id}/v{i}")
-        return res
-    finally:
-        net.unpersist()
+    )
+    # one victim scan feeds the main merge AND every view
+    return merge_with_views(net, table, list(views), batch_id, None)
 
 
 def dedup_sweep(table: LakeTable, index: LakeTable, views=(),

@@ -22,11 +22,14 @@ DDL list (a handful of rows per billions of DML) is collected to the driver.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from canal_spark.lsn import encode_lsn_col
 from canal_spark.operators.filters import envelope_filter
@@ -132,7 +135,8 @@ def apply_dml_range(events: DataFrame, table: LakeTable,
     the SAME net-change set in the same range (the ES-adapter
     denormalized-sync analog, client-adapter/escore/.../
     ESSyncService.java:458-492) — the collapse shuffle is persisted once
-    and reused for every view.
+    and reused for every view, and the views commit concurrently with the
+    main merge (``merge_with_views``).
 
     ``dlq``: dead-letter directory. When set, poison EVENTS (unroutable
     key, corrupt or missing wire payload) are screened out BEFORE the LWW
@@ -193,24 +197,79 @@ def apply_dml_range(events: DataFrame, table: LakeTable,
             changes = changes.where(F.col(key).isNotNull())
         net = collapse_lww(changes, key=table.key_col,
                            salt_partitions=salt_partitions)
-    # the collapse shuffle is persisted once only when views reuse it
-    if views:
-        net = net.persist()
+    res = merge_with_views(net, table, views, batch_id, hi)
+    if dlq is not None:
+        # a ledger-skipped redelivery applied nothing: report 0 so
+        # cumulative metrics never double-count the same quarantined
+        # rows (the DLQ files themselves are idempotent) — ADVICE r03 #5
+        res["quarantined"] = 0 if res.get("skipped") else n_bad
+    return res
+
+
+def fan_out(spark: SparkSession, main: Callable, beside=(), after=()):
+    """Run ``main()`` on this thread while a driver pool runs each
+    ``beside`` callable; once ``main`` returns, the pool also runs each
+    ``after`` callable (none if ``main`` raised). The pool is as wide as
+    its tasks, and each task carries this thread's Spark local properties
+    (job group, description). Every task is joined before this returns;
+    the first error — ``main``'s, else the first failed task in submission
+    order — is raised. Returns ``main``'s result.
+
+    The pooled per-table apply of the reference (RdbSyncService.java:
+    52-131): independent tables commit at once, so a small epoch pays the
+    driver-serial Spark job latency once instead of once per table."""
+    if not beside and not after:
+        return main()
+    with ThreadPoolExecutor(len(beside) + len(after)) as pool:
+        def submit(f):
+            # a fresh clone of the local properties per task: a pool thread
+            # adopts the object it is handed, so tasks sharing one would see
+            # each other's job groups and SQL execution ids
+            return pool.submit(inheritable_thread_target(spark)(f))
+
+        futs = [submit(f) for f in beside]
+        out = main()
+        futs += [submit(f) for f in after]
+    for f in futs:
+        f.result()
+    return out
+
+
+def merge_with_views(net: DataFrame, table: LakeTable, views: list | None,
+                     batch_id: str | None, hi: str | None) -> dict:
+    """``table.merge_apply(net)`` and every view's apply over the same
+    net-change set, concurrently (``fan_out``). Each view is its own LSN-fenced table with
+    its own ledger id ``{batch_id}/v{i}``, so they commit independently;
+    views that read the source's pre-merge state (``View.reads_source``)
+    start only after the main merge returned, one after another on one
+    pool thread (they share the source table: its snapshot refresh and
+    ChildAggView's fk posting map). A failure can leave any subset of
+    {main, each view} committed; redelivering the batch converges — the
+    committed tables skip by ledger, the rest apply.
+
+    ``net`` (the collapse shuffle) is persisted and materialized by ONE
+    action before any task starts: tasks racing to compute an uncached
+    ``net`` made the job count timing-dependent (adaptive execution
+    planned extra jobs for the duplicate reads)."""
+    if not views:
+        return table.merge_apply(net, batch_id=batch_id, max_lsn=hi)
+
+    def task(i, v):
+        vid = None if batch_id is None else f"{batch_id}/v{i}"
+        return lambda: v.apply(net, batch_id=vid, max_lsn=hi)
+
+    beside = [task(i, v) for i, v in enumerate(views) if not v.reads_source]
+    chained = [task(i, v) for i, v in enumerate(views) if v.reads_source]
+    net = net.persist()
     try:
-        res = table.merge_apply(net, batch_id=batch_id, max_lsn=hi)
-        for i, v in enumerate(views or []):
-            v.apply(net,
-                    batch_id=None if batch_id is None else f"{batch_id}/v{i}",
-                    max_lsn=hi)
-        if dlq is not None:
-            # a ledger-skipped redelivery applied nothing: report 0 so
-            # cumulative metrics never double-count the same quarantined
-            # rows (the DLQ files themselves are idempotent) — ADVICE r03 #5
-            res["quarantined"] = 0 if res.get("skipped") else n_bad
-        return res
+        net.count()
+        return fan_out(
+            net.sparkSession,
+            lambda: table.merge_apply(net, batch_id=batch_id, max_lsn=hi),
+            beside=beside,
+            after=[lambda: [t() for t in chained]] if chained else ())
     finally:
-        if views:
-            net.unpersist()
+        net.unpersist()
 
 
 def apply_events(events: DataFrame, table: LakeTable,

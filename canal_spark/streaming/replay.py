@@ -29,6 +29,7 @@ because a stream's schema cannot change mid-flight while the log's can
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 
@@ -38,7 +39,7 @@ from pyspark.sql import functions as F
 from canal_spark.metrics import MetricsLog, batch_stats
 from canal_spark.operators.decode import wire_schema
 from canal_spark.operators.transactions import TxnTailState, split_at_txn_boundary
-from canal_spark.pipeline import apply_events, prepare_envelope
+from canal_spark.pipeline import apply_events, fan_out, prepare_envelope
 from canal_spark.table.lake import LakeTable
 
 # the fixed wire envelope: everything the generator writes, images as JSON
@@ -145,10 +146,13 @@ class StreamingReplay:
                                                   self._lineage_key())
             if not n_rows:
                 lineage = []
-            stats = self._apply(complete, epoch_id)
-            if n_rows:
-                for s in self.message_sinks:
-                    s.publish(complete, f"{epoch_id:09d}")
+            # the topic publishes concurrently with the merge: its epoch-
+            # keyed directory is a no-op on redelivery in either crash order
+            topic = f"{epoch_id:09d}"
+            stats = fan_out(
+                self.spark, lambda: self._apply(complete, epoch_id),
+                beside=[functools.partial(s.publish, complete, topic)
+                        for s in (self.message_sinks if n_rows else ())])
             # tail spill AFTER the merge committed: a crash in between
             # replays the epoch (ledger no-op) and rebuilds the same tail
             if tail is not None:

@@ -49,9 +49,16 @@ class View:
     view's own :class:`LakeTable`; ``apply(net_changes, batch_id,
     max_lsn)`` folds one batch of net-effect changes (key + data cols + op
     + lsn, one row per key) into it; ``on_source_truncate(lsn)`` follows a
-    TRUNCATE of the source table."""
+    TRUNCATE of the source table.
+
+    ``reads_source``: ``apply`` reads the source table's pre-merge state
+    (its snapshot's ``parent``, ``_source_deltas``), so it must run after
+    the source's merge of the same batch committed; every other view
+    reads only the net changes and its own table, and commits
+    concurrently with the source's merge (``pipeline.merge_with_views``)."""
 
     table: LakeTable
+    reads_source = False
 
     def apply(self, net_changes: DataFrame, batch_id: str | None = None,
               max_lsn: str | None = None) -> dict:
@@ -981,6 +988,8 @@ class ChildAggView(View):
     Parent deletes tombstone the view row.
     """
 
+    reads_source = True
+
     def __init__(self, view_table: LakeTable, child: LakeTable,
                  fk_col: str, sum_cols: tuple = ("n_tok",)):
         self.table = view_table
@@ -1226,6 +1235,8 @@ class AggRollupView(View):
     change arrives in a range whose LSNs trail an earlier range's.
     TRUNCATE propagates via the default ``View.on_source_truncate``.
     """
+
+    reads_source = True
 
     def __init__(self, view_table: LakeTable, main: LakeTable,
                  group_col: str = "source", sum_cols: tuple = ("n_tok",)):

@@ -23,7 +23,10 @@ reproduce the driver's red rows):
   DuckDB's ``SUM(BIGINT) -> HUGEINT -> pandas float64`` (``12.0``) never
   hash-equals Spark's int64 (``12``) even when the integers are equal.
   The old ``astype`` normalization masked exactly this for two rounds
-  (cdc_agg_rollup, VERDICT r04 wrong #1).
+  (cdc_agg_rollup, VERDICT r04 wrong #1). The kinds come from the
+  declared types — the Spark schema and the DuckDB result's Arrow types —
+  not from pandas dtypes, which turn any integer column holding a NULL
+  into float64 and so hid the mismatch in exactly those columns.
 """
 
 from __future__ import annotations
@@ -49,6 +52,30 @@ def _norm(df: pd.DataFrame) -> pd.DataFrame:
         if df[c].dtype == object:
             df[c] = df[c].map(lambda v: str(v) if v is not None else None)
     return df.sort_values(list(df.columns), ignore_index=True)
+
+
+def _spark_kind(dt) -> str:
+    """"f" for a floating Spark type, "i" for an integral one, else "o"."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        return "f"
+    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        return "i"
+    return "o"
+
+
+def _arrow_kind(t) -> str:
+    """The same kinds for a DuckDB result column's Arrow type. DECIMAL
+    (and HUGEINT, which Arrow carries as decimal) count as float: the
+    gate's pandas frame and the driver both see them as float64."""
+    import pyarrow as pa
+
+    if pa.types.is_floating(t) or pa.types.is_decimal(t):
+        return "f"
+    if pa.types.is_integer(t):
+        return "i"
+    return "o"
 
 
 def main() -> int:
@@ -93,7 +120,10 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            sres = fn(spark, sf_dir)
+            skind = {f.name: _spark_kind(f.dataType)
+                     for f in sres.schema.fields}
+            sdf = sres.toPandas()
         except Exception as e:
             failures.append(name)
             print(f"FAIL {name}: spark error: {e}")
@@ -103,6 +133,8 @@ def main() -> int:
             print(f"ok   {name}: rows={len(sdf)} (rows-only) [{dt:.1f}s]")
             continue
         try:
+            dres = con.execute(oracles[name]).fetch_arrow_table()
+            dkind = {f.name: _arrow_kind(f.type) for f in dres.schema}
             ddf = con.execute(oracles[name]).fetchdf()
         except Exception as e:
             failures.append(name)
@@ -120,15 +152,15 @@ def main() -> int:
         bad = reason = None
         for c in s.columns:
             a, b = s[c], d[c]
-            a_f, b_f = a.dtype.kind == "f", b.dtype.kind == "f"
-            if a_f != b_f and not (a.isna().any() or b.isna().any()):
-                # one side float, the other integral, and NOT the
-                # nullable-int-becomes-float64 pandas artifact (no NaNs):
-                # the driver's value hash sees "12.0" vs "12" -> red
-                bad, reason = c, (f"dtype kind mismatch (spark {a.dtype} vs "
-                                  f"duck {b.dtype}) — driver hash would differ")
+            if (skind[c] == "f") != (dkind[c] == "f"):
+                # one side float, the other not, by the DECLARED types —
+                # pandas turns a nullable int column into float64, so its
+                # dtype cannot tell: the driver's value hash sees "12.0"
+                # vs "12" -> red
+                bad, reason = c, (f"type kind mismatch (spark {skind[c]} vs "
+                                  f"duck {dkind[c]}) — driver hash would differ")
                 break
-            if a_f or b_f:
+            if a.dtype.kind == "f" or b.dtype.kind == "f":
                 eq = np.allclose(a.astype(float), b.astype(float),
                                  rtol=0, atol=0, equal_nan=True)
             else:
